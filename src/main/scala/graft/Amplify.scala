@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence amplifier (tooling, not part of the driver contract):
@@ -28,16 +28,7 @@ object Amplify {
   def main(args: Array[String]): Unit = {
     val (src, out, copies) = (args(0), args(1), args(2).toInt)
     require(copies >= 1, "copies must be >= 1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus, LocalSession.cpus)
 
     def amp(table: String)(f: DataFrame => DataFrame): Unit = {
       val df = spark.read.parquet(s"$src/$table.parquet")

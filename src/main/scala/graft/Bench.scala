@@ -22,8 +22,7 @@ object Bench {
     // default to every core on the machine: the bench contract is local[32]
     // on the 32-cpu driver box, and an unset env var must not quietly run
     // the whole suite on 4 threads (r1-r4 driver benches did exactly that)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+    val cpus = LocalSession.cpus
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // shuffle parallelism defaults to the thread count but is its own knob:
@@ -33,12 +32,7 @@ object Bench {
     // lever a real cluster turns, exercised here by configuration
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession(cpus, shufflePartitions,
       // the warm-up pass only delivers steady-state if the generated
       // classes SURVIVE until the timed pass: the codegen class cache
       // defaults to 100 entries, so a 150+-query suite evicts the
@@ -47,9 +41,7 @@ object Bench {
       // ~1.5-2.5x inflation of exactly the early-suite rows (the r13
       // closing artifact's c/d-named over-2x cluster). Static conf: must
       // be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.codegen.cache.maxEntries" -> "5000")
     def esc(s: String): String =
       s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
                   case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }

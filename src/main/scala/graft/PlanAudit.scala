@@ -12,13 +12,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("pull_all_events", "pull_latest_events", "pit_join",
         "q1_pricing_summary", "q3_top_orders", "dedup_minhash")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("4", "4")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

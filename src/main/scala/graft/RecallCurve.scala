@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN recall-vs-probes evidence harness (tooling, not part of the driver
@@ -25,16 +24,7 @@ object RecallCurve {
     val numCells = args(1).toInt
     val nQueries = args(2).toInt
     val k = if (args.length > 3) args(3).toInt else 10
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus, LocalSession.cpus)
     import graft.ops.Similarity
 
     val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -619,17 +619,12 @@ object Dedup {
     // iterate ONLY over nodes that appear in an edge — at corpus scale the
     // overwhelming majority of docs are in no near-dup pair and their label
     // never moves; they rejoin as singletons at the end
-    var labels = edges.select(col("src").as("id")).distinct()
+    val labels0 = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("cluster"))
-    // handle to the previous iteration's checkpoint so its blocks release
-    // once the next one materializes (the trainBpeMerges discipline): at
-    // most two label snapshots live in executor storage, not one per
-    // iteration. `p` and the FINAL labels checkpoint stay persisted — the
-    // returned (lazy) plan reads them.
-    var prevCkpt: Option[DataFrame] = None
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIterations) {
+    // `p` and the final labels checkpoint stay persisted — the returned
+    // (lazy) plan reads them
+    val res = Fixpoint.iterate(labels0, maxIterations) { (prev, i) =>
+      val labels = prev.drop("_old")
       // candidate label for dst = min label among neighbors' current labels
       val viaNeighbors = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
@@ -646,25 +641,20 @@ object Dedup {
         .observe(obs,
           sum(when(col("cluster") =!= col("_old"), 1L).otherwise(0L)).as("changed"))
         .localCheckpoint() // truncate the growing iterative lineage
-      changed = scala.util.Try(
+      val changed = scala.util.Try(
         scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration("30s"))
           .getAs[Long]("changed"))
         .getOrElse(// listener didn't fire for this action shape: count instead
           next.filter(col("cluster") =!= col("_old")).count())
-      prevCkpt.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-      prevCkpt = Some(next)
-      labels = next.drop("_old")
-      i += 1
+      (next, changed == 0L)
     }
     // singletons (no edges) are their own cluster
-    val result = ids.join(labels, Seq("id"), "left")
+    val result = ids.join(res.last.drop("_old"), Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    val finalCkpt = prevCkpt
-    val release = () => {
+    (result, () => {
       org.apache.spark.sql.graft.CheckpointUtil.unpersist(p)
-      finalCkpt.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-    }
-    (result, release)
+      res.release()
+    })
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
@@ -687,10 +677,9 @@ object Dedup {
     *
     * Shape at 100 TB: each round is two narrow (src, dst) aggregations +
     * equality joins, map-side combinable, edge-set-sized — never touches
-    * payloads; the [[connectedComponentsReleasable]] checkpoint discipline
-    * (at most two edge snapshots persisted, previous released as the next
-    * materializes). Convergence check: edge count + one `except` when
-    * counts match — exact set equality, edge-set-sized.
+    * payloads; each round's edges checkpoint through [[Fixpoint.iterate]].
+    * Convergence check: edge count + one `except` when counts match —
+    * exact set equality, edge-set-sized.
     */
   def connectedComponentsLS(
       ids: DataFrame, // column: id
@@ -704,17 +693,15 @@ object Dedup {
       ids: DataFrame,
       pairs: DataFrame,
       maxIterations: Int = 20): (DataFrame, Int, () => Unit) = {
-    var edges = pairs
+    val edges0 = pairs
       .filter(col("a_id") =!= col("b_id"))
       .select(greatest(col("a_id"), col("b_id")).as("src"),
         least(col("a_id"), col("b_id")).as("dst"))
       .distinct()
       .localCheckpoint()
-    var prevCount = edges.count()
-    var prevCkpt: Option[DataFrame] = None
-    var converged = prevCount == 0L
-    var rounds = 0
-    while (!converged && rounds < maxIterations) {
+    var prevCount = edges0.count()
+    val maxRounds = if (prevCount == 0L) 0 else maxIterations
+    val res = Fixpoint.iterate(edges0, maxRounds) { (edges, round) =>
       // LARGE-STAR over symmetric neighborhoods: m_u = min(Γ(u) ∪ {u});
       // every strictly-larger neighbor re-points at m_u
       val nb = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -737,21 +724,20 @@ object Dedup {
         .distinct()
         .localCheckpoint()
       val n = ss.count() // materializes the checkpoint
-      converged = n == prevCount && ss.except(edges).count() == 0L
-      prevCkpt.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-      prevCkpt = Some(edges)
-      edges = ss
+      val converged = n == prevCount && ss.except(edges).count() == 0L
+      // the deduplicated pair list is this loop's init, which iterate
+      // never releases: it goes once round 1's edges exist
+      if (round == 0) org.apache.spark.sql.graft.CheckpointUtil.unpersist(edges0)
       prevCount = n
-      rounds += 1
+      (ss, converged)
     }
-    prevCkpt.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
     // min per src guards the not-converged-at-cap case (multiple out-edges)
-    val lbl = edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("cluster"))
+    val lbl = res.last.groupBy(col("src").as("id")).agg(min(col("dst")).as("cluster"))
     val result = ids.join(lbl, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    val finalCkpt = edges
-    (result, rounds,
-      () => org.apache.spark.sql.graft.CheckpointUtil.unpersist(finalCkpt))
+    (result, res.rounds,
+      if (res.rounds == 0) () => org.apache.spark.sql.graft.CheckpointUtil.unpersist(edges0)
+      else res.release)
   }
 
   /** Deterministic random hyperplanes for sign-bucket LSH (seeded, so results
@@ -1679,6 +1665,7 @@ object Dedup {
     // total order, which the location filter's proof needs — keep the
     // first plen with their positions; checkpointed because the candidate
     // SELF-JOIN consumes it twice
+    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
     val pref = ex.join(dfc, "_g")
       .groupBy(col("_id"))
       .agg(array_sort(collect_list(
@@ -1694,6 +1681,15 @@ object Dedup {
         explode(slice(col("_hs"), 1, plen)).as("_e"))
       .select(col("_id"), col("_s"), col("_len"),
         col("_e._g").as("_g"), col("_e._p").as("_p"))
+      // hash-partitioned on the join key BEFORE the checkpoint: the
+      // checkpoint keeps that partitioning, so both self-join sides read
+      // it in place — no exchange at the join, hence no shuffle read for
+      // AQE to coalesce. The join's cost is its OUTPUT (the per-gram f²
+      // pair expansion and the codegen'd verify) while its input is a few
+      // MB of prefix rows, so a coalesced read collapsed it to ONE task
+      // (measured r20: 3.1 s of a 4.4 s query); a user-specified
+      // repartition is never coalesced and keeps nPart tasks at any scale
+      .repartition(nPart, col("_g"))
       .localCheckpoint(false)
     // the ED-Join LOCATION filter rides the candidate join: distance-t
     // pairs must share a prefix gram within t POSITIONS (with prefixes
@@ -1704,22 +1700,10 @@ object Dedup {
     // On serial-number corpora the value-only filter admits f² pairs per
     // hot tail gram (measured 10M candidates / 15k names at sf0.1); the
     // position predicate cuts that to the truly alignable pairs
-    // the candidate join's cost is its OUTPUT — the per-gram f² pair
-    // expansion and the codegen'd threshold verify — while its shuffle
-    // INPUT is a few MB of prefix rows: AQE's byte-based partition
-    // coalescing therefore collapses the join to ONE task (measured r20:
-    // 3.1 s of a 4.4 s query in a single-task stage). Pinning both sides
-    // as user-specified repartitions on the join key — the same exchange
-    // EnsureRequirements would plan, same session partition count — keeps
-    // the expansion parallel at every scale; AQE never coalesces
-    // user-specified repartitions
-    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
     val candBig = pref.select(col("_id").as("_aid"), col("_s").as("_as"),
         col("_len").as("_al"), col("_g"), col("_p").as("_pa"))
-      .repartition(nPart, col("_g"))
       .join(pref.select(col("_id").as("_bid"), col("_s").as("_bs"),
-        col("_len").as("_bl"), col("_g"), col("_p").as("_pb"))
-        .repartition(nPart, col("_g")), Seq("_g"))
+        col("_len").as("_bl"), col("_g"), col("_p").as("_pb")), Seq("_g"))
       .filter(col("_aid") < col("_bid") &&
         abs(col("_al") - col("_bl")) <= maxDistance &&
         abs(col("_pa") - col("_pb")) <= maxDistance)

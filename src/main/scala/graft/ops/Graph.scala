@@ -44,8 +44,8 @@ object Graph {
     * keyed re-aggregation — the standard Pregel-free formulation; the edge
     * list with out-degrees is checkpointed ONCE and reused every
     * iteration, and each iteration's rank table checkpoints to truncate
-    * the growing lineage (the [[Dedup.connectedComponents]] discipline),
-    * releasing the previous snapshot so at most two live at once.
+    * the growing lineage ([[Fixpoint.iterate]] releases the superseded
+    * snapshots).
     */
   def pageRank(
       edges: DataFrame,
@@ -83,7 +83,8 @@ object Graph {
     * [[personalizedPageRank]]: `nodesT` carries each node's per-iteration
     * teleport term (`_tp`) and initial rank (`_r0`) — uniform for global
     * PageRank, seed-concentrated for the personalized form. Identical
-    * integer lane and checkpoint discipline either way.
+    * integer lane either way; `eDeg`, `nodes` and the final rank snapshot
+    * stay persisted — the returned plan reads them.
     */
   private def prLoop(
       eDeg: DataFrame,
@@ -92,10 +93,9 @@ object Graph {
       dampingPct: Int,
       redistribute: Boolean = false): DataFrame = {
     val nodes = nodesT.localCheckpoint()
-    var rank = nodes.select(col("node"), col("_r0").as("rank"),
+    val rank0 = nodes.select(col("node"), col("_r0").as("rank"),
       (if (redistribute) col("_dg") else lit(false)).as("_dg"))
-    var prevCkpt: Option[DataFrame] = None
-    for (_ <- 1 to iterations) {
+    Fixpoint.iterate(rank0, iterations) { (rank, _) =>
       val contrib = eDeg
         .join(rank.select(col("node").as("src"), col("rank")), Seq("src"))
         .select(col("dst").as("node"), expr("rank div outdeg").as("_c"))
@@ -119,14 +119,8 @@ object Graph {
             .as("rank"),
           (if (redistribute) col("_dg") else lit(false)).as("_dg"))
         .localCheckpoint()
-      // at most two rank snapshots live in executor storage (the
-      // connectedComponents discipline); eDeg/nodes and the FINAL rank
-      // checkpoint stay persisted — the returned plan reads them
-      prevCkpt.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-      prevCkpt = Some(next)
-      rank = next
-    }
-    rank.select(col("node"), col("rank"))
+      (next, false)
+    }.last.select(col("node"), col("rank"))
   }
 
   /** Personalized PageRank — [[pageRank]] with the teleport mass
@@ -225,8 +219,8 @@ object Graph {
     * with the labels table plus two keyed aggregations ((node, label) counts
     * then per-node arg-max) — all narrow (id, label, count) rows; the edge
     * list checkpoints once, each round's labels checkpoint to truncate
-    * lineage with at most two snapshots live (the [[pageRank]] /
-    * [[Dedup.connectedComponents]] discipline).
+    * lineage ([[Fixpoint.iterate]]); the edge list and the final labels
+    * stay persisted.
     */
   def labelPropagation(
       edges: DataFrame,
@@ -242,11 +236,10 @@ object Graph {
       .localCheckpoint(false) // feeds the mirror both ways + the node set
     val nbrs = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-    var labels = und.select(col("a").as("id"))
+    val labels0 = und.select(col("a").as("id"))
       .unionByName(und.select(col("b").as("id"))).distinct()
       .select(col("id"), col("id").as("community"))
-    var prevCkpt: Option[DataFrame] = None
-    for (_ <- 1 to rounds) {
+    Fixpoint.iterate(labels0, rounds) { (labels, _) =>
       val next = nbrs
         .join(labels.select(col("id").as("src"), col("community")), Seq("src"))
         .groupBy(col("dst").as("id"), col("community"))
@@ -257,11 +250,8 @@ object Graph {
           .as("_best"))
         .select(col("id"), col("_best._l").as("community"))
         .localCheckpoint()
-      prevCkpt.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-      prevCkpt = Some(next)
-      labels = next
-    }
-    labels
+      (next, false)
+    }.last
   }
 
   /** k-core of an undirected simple graph — the maximal subgraph in which
@@ -288,11 +278,10 @@ object Graph {
     * Shape at 100 TB: per round one mirrored degree aggregation + two
     * semi-joins of the surviving edge list against the keep set — narrow
     * (a, b)/(id, deg) rows only; each round's survivors checkpoint
-    * (truncating lineage, at most two snapshots live — the
-    * [[Dedup.connectedComponents]] discipline) and the round count is
-    * bounded by the peel depth, ≤ a few dozen on real degree
-    * distributions (each round removes a whole degree-layer, not one
-    * node).
+    * (truncating lineage, [[Fixpoint.iterate]]; only the final survivors
+    * stay persisted) and the round count is bounded by the peel depth,
+    * ≤ a few dozen on real degree distributions (each round removes a
+    * whole degree-layer, not one node).
     */
   def kCore(
       edges: DataFrame,
@@ -321,12 +310,9 @@ object Graph {
     // shuffle WRITE, so even the shuffle saving was partial. The simple
     // form below keeps one heavy pipelined job + one trivial count per
     // round.
-    var live = und
-    var nLive = live.count()
-    var prevCkpt: Option[DataFrame] = Some(und)
-    var round = 0
-    var done = nLive == 0L
-    while (round < maxRounds && !done) {
+    var nLive = und.count()
+    val peels = if (nLive == 0L) 0 else maxRounds
+    val core = Fixpoint.iterate(und, peels) { (live, round) =>
       val deg = live.select(col("a").as("id"))
         .unionByName(live.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -337,15 +323,15 @@ object Graph {
         .select(col("a"), col("b"))
         .localCheckpoint()
       val n = next.count()
-      prevCkpt.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-      prevCkpt = Some(next)
-      done = n == nLive
+      // the input edge list is this loop's init, which iterate never
+      // releases: it goes once round 1's survivors exist
+      if (round == 0) org.apache.spark.sql.graft.CheckpointUtil.unpersist(und)
+      val done = n == nLive
       nLive = n
-      live = next
-      round += 1
-    }
-    live.select(col("a").as("id"))
-      .unionByName(live.select(col("b").as("id")))
+      (next, done)
+    }.last
+    core.select(col("a").as("id"))
+      .unionByName(core.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("degree"))
   }
 
@@ -854,15 +840,9 @@ object Graph {
       maxRadius: Int,
       p: Int = 4,
       undirected: Boolean = true): DataFrame = {
+    require(p >= 1, "p too small") // 2^(64-p) must fit a long
     val m = 1 << p
-    val width = 64 - p
-    require(width - 1 <= 62, "p too small") // 2^(width+1-rank) must fit
-    val shiftBase = width + 1 // rank 1..width+1 → exponent width..0
-    val twoShift = BigInt(2).pow(shiftBase)
-    val alphaNum = BigInt(hllAlphaPpm(p)) * m * m * twoShift
-    val lcCase = hllLcMicroTable(p).zipWithIndex.map { case (v, i) =>
-      s"WHEN ${i + 1} THEN ${v}L"
-    }.mkString("CASE _zeros ", " ", " ELSE NULL END")
+    val shiftBase = hllShiftBase(p)
     // the per-(radius, node) moment pair (_nonempty, _d) comes from the
     // WIDE register stack as an in-row projection when 2^p ≤ 64 — the
     // row-form groupBy re-exchanged V·registers·(R+1) rows just to count
@@ -881,14 +861,34 @@ object Graph {
         wide.select(col("radius"), col("node"),
           nonempty.as("_nonempty"), dSum.as("_d"))
       case None =>
-        neighborhoodRegistersRowForm(
-            edges, srcCol, dstCol, maxRadius, p, undirected)
-          .groupBy(col("radius"), col("node"))
-          .agg(count(lit(1)).as("_nonempty"),
-            sum(expr(
-              s"CAST(shiftleft(1L, $shiftBase - max_rank) AS DECIMAL(38,0))"))
-              .as("_d"))
+        registerMoments(neighborhoodRegistersRowForm(
+          edges, srcCol, dstCol, maxRadius, p, undirected), p)
     }
+    harmonicFromMoments(nd, maxRadius, p)
+  }
+
+  /** Register rank 1..65−p maps to the exponent `hllShiftBase − rank`. */
+  private def hllShiftBase(p: Int): Int = 65 - p
+
+  /** [[harmonicCentrality]]'s per-(radius, node) moments `(_nonempty, _d)`
+    * over row-form `(radius, node, bucket, max_rank)` registers. */
+  private[ops] def registerMoments(regs: DataFrame, p: Int): DataFrame =
+    regs.groupBy(col("radius"), col("node"))
+      .agg(count(lit(1)).as("_nonempty"),
+        sum(expr(
+          s"CAST(shiftleft(1L, ${hllShiftBase(p)} - max_rank) AS DECIMAL(38,0))"))
+          .as("_d"))
+
+  /** The quantized estimator and radius-delta sum of [[harmonicCentrality]]
+    * over its per-(radius, node) moments. */
+  private[ops] def harmonicFromMoments(
+      nd: DataFrame, maxRadius: Int, p: Int): DataFrame = {
+    val m = 1 << p
+    val twoShift = BigInt(2).pow(hllShiftBase(p))
+    val alphaNum = BigInt(hllAlphaPpm(p)) * m * m * twoShift
+    val lcCase = hllLcMicroTable(p).zipWithIndex.map { case (v, i) =>
+      s"WHEN ${i + 1} THEN ${v}L"
+    }.mkString("CASE _zeros ", " ", " ELSE NULL END")
     val est = nd
       .withColumn("_zeros", lit(m.toLong) - col("_nonempty"))
       .withColumn("_raw", expr(

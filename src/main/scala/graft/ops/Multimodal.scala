@@ -84,7 +84,9 @@ object Multimodal {
     // a 3× executorRunTime swing (59 s → 200 s task-time for identical
     // work) in the image-dedup family once the synthesis pass was
     // parallelized. All payloads here are small in-memory byte arrays; the
-    // memory-cached stream is strictly better. Per-JVM, set once.
+    // memory-cached stream is strictly better. The flag is PROCESS-GLOBAL:
+    // once this object initializes, every ImageIO user in the JVM
+    // (executor threads, other libraries) caches streams in memory too.
     javax.imageio.ImageIO.setUseCache(false)
 
     final case class Decoded(width: Int, height: Int, argb: Array[Int])

@@ -1505,18 +1505,14 @@ object TextAnalysis {
     * its text, and the encoder's output decodes byte-exactly back to the
     * space-joined token stream.
     *
-    * Shape at 100 TB (the [[graft.ops.Dedup.connectedComponents]] loop
-    * discipline): the corpus is scanned ONCE for the word-frequency table;
+    * Shape at 100 TB: the corpus is scanned ONCE for the word-frequency table;
     * every iteration after that is a narrow pair-count aggregation over the
     * VOCABULARY (pair generation in-row via the native `WordPairs` kernel,
     * counts weighted by `cnt` so corpus size never re-enters), one
     * 1-row driver collect for the winner, and a checkpointed one-column
-    * rewrite of the symbol arrays. The driver holds only the merge table
-    * (`numMerges` rows); vocabulary state stays distributed. Each rank's
-    * checkpoint is RELEASED as soon as its successor materializes
-    * ([[org.apache.spark.sql.graft.CheckpointUtil]]) — executor storage
-    * holds at most two vocabulary snapshots at any instant, not one per
-    * rank. Cost model for a production run: ranks are inherently
+    * rewrite of the symbol arrays ([[mergeRanks]]). The driver holds only
+    * the merge table (`numMerges` rows); vocabulary state stays
+    * distributed. Cost model for a production run: ranks are inherently
     * sequential (each merge depends on the counts AFTER the previous one),
     * so a 32k-merge train is 32k vocabulary-sized jobs — minutes-to-hours
     * of fixed scheduling overhead regardless of corpus size; budget
@@ -1576,16 +1572,8 @@ object TextAnalysis {
           .select(col("cnt"),
             transform(sequence(lit(1), length(col("word"))),
               i => col("word").substr(i, lit(1))).as("syms"))
-    var words = trainWords.localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    // previous generation's checkpoint blocks, releasable only AFTER the
-    // current (lazy) generation materializes — the trainWordPieceMerges
-    // discipline (r20: lazy per-rank rewrites fold into the next rank's
-    // collect, one scheduled job per rank instead of two)
-    var releasable: Option[DataFrame] = None
-    while (rank <= numMerges && !exhausted) {
+    mergeRanks(trainWords.localCheckpoint(), numMerges) { (words, rank) =>
       // symbols are space-free (ASCII-printables minus the space the pair
       // string joins on), so the "l r" pair string orders exactly like the
       // (l, r) tuple and splits back losslessly
@@ -1596,25 +1584,12 @@ object TextAnalysis {
           split(col("pair"), " ").getItem(1).as("r"), col("n"))
         .orderBy(col("n").desc, col("l"), col("r"))
         .limit(1).collect()
-      // that collect was the current generation's first action — its lazy
-      // checkpoint is materialized, the superseded rank's blocks can go
-      releasable.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-      releasable = None
-      if (top.isEmpty) exhausted = true // every word is a single symbol
-      else {
-        val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+      top.headOption.map { t => // None: every word is a single symbol
+        val (l, r, n) = (t.getString(0), t.getString(1), t.getLong(2))
         merges += ((rank, l, r, l + r, n))
-        releasable = Some(words)
-        words = words
-          .withColumn("syms", BpeMergeAdjacent(col("syms"), l, r))
-          .localCheckpoint(false) // truncate the per-rank growing lineage
-        rank += 1
+        BpeMergeAdjacent(col("syms"), l, r)
       }
     }
-    releasable.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-    // the merge table lives on the driver; nothing reads the final
-    // vocabulary snapshot either
-    org.apache.spark.sql.graft.CheckpointUtil.unpersist(words)
     import spark.implicits._
     merges.toSeq.toDF("rank", "left_sym", "right_sym", "merged", "n")
   }
@@ -1640,7 +1615,7 @@ object TextAnalysis {
     * sequence replays bit-for-bit in any engine; no float ratio ever
     * enters. Returns `(rank, left_sym, right_sym, merged, n, score_q)`.
     *
-    * Shape at 100 TB: the [[trainBpeMerges]] discipline — ONE corpus scan
+    * Shape at 100 TB: the [[trainBpeMerges]] shape — ONE corpus scan
     * builds the word-frequency table (checkpointed), then each rank is two
     * vocabulary-sized aggregations (adjacent pairs + symbol marginals, the
     * marginal join riding the tiny pair table) and a 1-row collect; the
@@ -1677,16 +1652,9 @@ object TextAnalysis {
           when(i === 1, col("word").substr(i, lit(1)))
             .otherwise(concat(lit("##"), col("word").substr(i, lit(1)))))
           .as("syms"))
-    var words = trainWords.localCheckpoint()
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long, Long)]
-    var rank = 1
-    var exhausted = false
-    // previous generation's checkpoint blocks, releasable only AFTER the
-    // current (lazy) generation has materialized — a lazy checkpoint's
-    // lineage still reads them until its own first action
-    var releasable: Option[DataFrame] = None
-    while (rank <= numMerges && !exhausted) {
+    mergeRanks(trainWords.localCheckpoint(), numMerges) { (words, rank) =>
       // the symbol-count table is ALPHABET-BOUNDED by construction at any
       // corpus scale (words pass the printable-ASCII filter, so symbols
       // are ≤ 94 bare + 94 ## single-char forms + one merged piece per
@@ -1698,10 +1666,6 @@ object TextAnalysis {
         .select(col("cnt"), explode(col("syms")).as("s"))
         .groupBy(col("s")).agg(sum(col("cnt")).as("ns"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // this collect was the current generation's first action — its lazy
-      // checkpoint is now materialized and the previous one can release
-      releasable.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-      releasable = None
       val symLit = typedLit(symCnt)
       val top = words
         .select(col("cnt"), explode(WordPairs(col("syms"), 1)).as("pair"))
@@ -1716,25 +1680,41 @@ object TextAnalysis {
         .select(col("l"), col("r"), col("n"), col("score_q"))
         .orderBy(col("score_q").desc, col("n").desc, col("l"), col("r"))
         .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, n, sq) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2), top(0).getLong(3))
+      top.headOption.map { t =>
+        val (l, r, n, sq) = (t.getString(0), t.getString(1), t.getLong(2), t.getLong(3))
         val merged = l + r.stripPrefix("##")
         merges += ((rank, l, r, merged, n, sq))
-        // LAZY: the rewrite materializes inside the next rank's first job
-        // — one scheduled job per rank, not two; the consumed generation
-        // becomes releasable once that happens (see above)
-        releasable = Some(words)
-        words = words
-          .withColumn("syms", BpeMergeAdjacent(col("syms"), l, r, merged))
-          .localCheckpoint(false)
-        rank += 1
+        BpeMergeAdjacent(col("syms"), l, r, merged)
       }
     }
-    org.apache.spark.sql.graft.CheckpointUtil.unpersist(words)
     import spark.implicits._
     merges.toSeq.toDF("rank", "left_sym", "right_sym", "merged", "n", "score_q")
+  }
+
+  /** The per-rank merge loop shared by [[trainBpeMerges]] and
+    * [[trainWordPieceMerges]], over the checkpointed word table `words0`
+    * (`cnt`, `syms`). `pick(words, rank)` reads the current vocabulary and
+    * returns its rank's rewrite of `syms`, or None when nothing is left to
+    * merge. Each rewrite checkpoints LAZILY, so it materializes inside the
+    * next rank's first job — one scheduled job per rank, not two (r20).
+    * The merge tables live on the driver, so nothing stays persisted.
+    */
+  private def mergeRanks(words0: DataFrame, numMerges: Int)(
+      pick: (DataFrame, Int) => Option[Column]): Unit = {
+    val res = Fixpoint.iterate(words0, numMerges) { (words, i) =>
+      val rewrite = pick(words, i + 1)
+      // pick's first action materialized rank 1's rewrite, so the seed
+      // table (this loop's init, which iterate never releases) can go
+      if (i == 1) org.apache.spark.sql.graft.CheckpointUtil.unpersist(words0)
+      rewrite match {
+        case Some(syms) =>
+          (words.withColumn("syms", syms).localCheckpoint(false), false)
+        case None => (words, true)
+      }
+    }
+    res.release()
+    // a one-rank run never reached the seed release above
+    if (res.rounds < 2) org.apache.spark.sql.graft.CheckpointUtil.unpersist(words0)
   }
 
   /** The WordPiece alphabet of a corpus: every word-initial character bare

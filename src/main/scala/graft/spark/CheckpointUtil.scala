@@ -21,9 +21,20 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Dataset `localCheckpoint()` returned, or a pure projection of it), and
   * only once nothing will read it again: a locally-checkpointed RDD cannot
   * be recomputed, so any later action over it would fail.
+  *
+  * Iterative operators do not call this per round: they run through
+  * [[graft.ops.Fixpoint.iterate]], which owns superseded-generation release
+  * (and reads [[materialized]] to time it).
   */
 object CheckpointUtil {
-  def unpersist(ds: Dataset[_], blocking: Boolean = false): Unit = {
+  def unpersist(ds: Dataset[_], blocking: Boolean = false): Unit =
+    checkpointRdd(ds).unpersist(blocking)
+
+  /** Whether the handle's checkpoint has been computed: true right after an
+    * eager `localCheckpoint()`, and after the first action over a lazy one. */
+  def materialized(ds: Dataset[_]): Boolean = checkpointRdd(ds).isCheckpointed
+
+  private def checkpointRdd(ds: Dataset[_]) = {
     val rdds = ds.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
     // Exactly one checkpoint per handle, enforced: a plan joining TWO
     // checkpointed frames would otherwise silently release both, leaving the
@@ -33,6 +44,6 @@ object CheckpointUtil {
       s"CheckpointUtil.unpersist expects a plan holding exactly one " +
         s"checkpointed RDD (a localCheckpoint handle or a pure projection " +
         s"of one); found ${rdds.size} LogicalRDDs")
-    rdds.head.unpersist(blocking)
+    rdds.head
   }
 }

@@ -60,7 +60,7 @@ class PlanGateSpec extends SparkTestBase {
     // because its scored side stays un-checkpointed; here the bucketed
     // corpus is also checkpointed for the three mix branches)
     "pipeline_quality_mix",
-    // per-iteration localCheckpoints (the CC discipline) — the final plan
+    // per-iteration localCheckpoints (Fixpoint.iterate) — the final plan
     // reads the last snapshot only
     "page_rank",
     // the same loop with the per-iteration dangling-mass 1-row aggregate

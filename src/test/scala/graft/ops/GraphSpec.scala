@@ -486,19 +486,22 @@ class GraphSpec extends SparkTestBase {
       (20L to 26L).map(l => (19L, l))).toDF("src", "dst")
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
+    def harmonic(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     for (p <- Seq(4, 6); und <- Seq(true, false)) {
       val wide = collect(Graph.neighborhoodRegisters(
         edges, "src", "dst", maxRadius = 3, p = p, undirected = und))
-      val row = collect(Graph.neighborhoodRegistersRowForm(
+      val rowForm = Graph.neighborhoodRegistersRowForm(
+        edges, "src", "dst", maxRadius = 3, p = p, undirected = und)
+      assert(wide === collect(rowForm), s"wide lane diverged at p=$p undirected=$und")
+      // harmonicCentrality's in-row wide moments == the groupBy moments
+      // of the row-form registers, through the same estimator
+      val viaWide = harmonic(Graph.harmonicCentrality(
         edges, "src", "dst", maxRadius = 3, p = p, undirected = und))
-      assert(wide === row, s"wide lane diverged at p=$p undirected=$und")
+      val viaRows = harmonic(Graph.harmonicFromMoments(
+        Graph.registerMoments(rowForm, p), maxRadius = 3, p = p))
+      assert(viaWide.nonEmpty && viaWide === viaRows,
+        s"harmonic moments diverged at p=$p undirected=$und")
     }
-    // harmonicCentrality's in-row wide moments == the row-form groupBy
-    // moments: compare the full output against a recompute over the
-    // row-form registers is already pinned above; here pin lane equality
-    // via the public surface at p where BOTH lanes are reachable
-    val viaWide = Graph.harmonicCentrality(edges, "src", "dst", 2, 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(viaWide.nonEmpty)
   }
 }
