@@ -79,14 +79,12 @@ object Bench {
     val timings = collection.mutable.LinkedHashMap[String, Double]()
     val errors = collection.mutable.LinkedHashMap[String, String]()
     val telemetry = collection.mutable.LinkedHashMap[String, (Long, Double)]()
-    // opt-in per-query stage metrics (SPARK_GRAFT_STAGE_METRICS=1): shuffle
-    // read/write bytes and memory/disk spill, summed over the stages that
-    // COMPLETE while the query runs — the scale-evidence counters a wall
-    // time alone cannot carry (a query can stay fast while quietly starting
-    // to spill; the sf1-scale runs commit these alongside the seconds).
+    // per-query stage metrics: shuffle read/write bytes and memory/disk
+    // spill, summed over the stages that COMPLETE while the query runs —
+    // the scale-evidence counters a wall time alone cannot carry (a query
+    // can stay fast while quietly starting to spill).
     // Collected by a listener, not the UI, so it works with the UI off.
     val stageMetrics = collection.mutable.LinkedHashMap[String, (Long, Long, Long, Long)]()
-    val collectStageMetrics = sys.env.get("SPARK_GRAFT_STAGE_METRICS").contains("1")
     val acc = new java.util.concurrent.atomic.AtomicLongArray(4)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
@@ -100,7 +98,7 @@ object Bench {
         }
       }
     }
-    if (collectStageMetrics) spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(listener)
     selected.foreach { case (name, fn) =>
       // isolate queries from each other's garbage: collect BEFORE timing so
       // a heap full of the previous query's shuffle/broadcast debris doesn't
@@ -108,8 +106,7 @@ object Bench {
       // isolated vs 5.1 s late in a 75-query suite without this)
       System.gc()
       telemetry(name) = (System.currentTimeMillis(), load1())
-      val before =
-        if (collectStageMetrics) Array.tabulate(4)(acc.get) else null
+      val before = Array.tabulate(4)(acc.get)
       val t0 = System.nanoTime()
       try {
         run(fn)
@@ -118,21 +115,20 @@ object Bench {
         case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
-      if (collectStageMetrics) {
-        // drain the listener bus so this query's stage completions are in
-        // before the snapshot (local mode: a bounded queue, cheap). A slow
-        // drain must not abort the remaining suite — waitUntilEmpty throws
-        // TimeoutException, and losing the whole artifact over one query's
-        // possibly-incomplete metrics is the wrong trade. NonFatal only:
-        // an OOM or interrupt must still abort — continuing a suite on a
-        // corrupted heap would report garbage timings as real.
-        try org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 30000)
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"bench: listener bus drain timed out for $name " +
-            s"(${e.getClass.getSimpleName}) — stage metrics may be incomplete") }
-        stageMetrics(name) = (acc.get(0) - before(0), acc.get(1) - before(1),
-          acc.get(2) - before(2), acc.get(3) - before(3))
-      }
+      // drain the listener bus so this query's stage completions are in
+      // before the snapshot (local mode: a bounded queue, cheap; outside the
+      // timed window). A slow drain must not abort the remaining suite —
+      // waitUntilEmpty throws TimeoutException, and losing the whole
+      // artifact over one query's possibly-incomplete metrics is the wrong
+      // trade. NonFatal only: an OOM or interrupt must still abort —
+      // continuing a suite on a corrupted heap would report garbage timings
+      // as real.
+      try org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 30000)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"bench: listener bus drain timed out for $name " +
+          s"(${e.getClass.getSimpleName}) — stage metrics may be incomplete") }
+      stageMetrics(name) = (acc.get(0) - before(0), acc.get(1) - before(1),
+        acc.get(2) - before(2), acc.get(3) - before(3))
       // drop any (local-)checkpointed / cached blocks a query left behind so
       // accumulated storage never skews later queries' timings
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
@@ -142,12 +138,10 @@ object Bench {
     val tel = telemetry.map { case (k, (t, l)) =>
       s""""${esc(k)}":{"t_ms":$t,"load1":$l}""" }.mkString("{", ",", "}")
     val total = timings.values.sum
-    val sm =
-      if (stageMetrics.isEmpty) ""
-      else stageMetrics.map { case (k, (sr, sw, ms, ds)) =>
-        s""""${esc(k)}":{"shuffle_read_b":$sr,"shuffle_write_b":$sw,""" +
-          s""""mem_spill_b":$ms,"disk_spill_b":$ds}"""
-      }.mkString(""""stage_metrics":{""", ",", "},")
+    val sm = stageMetrics.map { case (k, (sr, sw, ms, ds)) =>
+      s""""${esc(k)}":{"shuffle_read_b":$sr,"shuffle_write_b":$sw,""" +
+        s""""mem_spill_b":$ms,"disk_spill_b":$ds}"""
+    }.mkString(""""stage_metrics":{""", ",", "},")
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,""" +
         sm + s""""telemetry":$tel,"load1_end":${load1()},"sf":"${esc(sfDir)}"}"""

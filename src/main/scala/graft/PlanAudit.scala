@@ -23,6 +23,18 @@ object PlanAudit {
     spark.stop()
   }
 
+  /** Shuffle exchanges, CartesianProducts and BroadcastNestedLoopJoins in
+    * a physical plan's text: what `PlanGateSpec` budgets and the summary
+    * prints. Broadcast exchanges are not shuffles.
+    */
+  final case class Shape(shuffles: Int, cartesians: Int, bnljs: Int)
+
+  def shape(plan: String): Shape = {
+    def count(re: String) = re.r.findAllIn(plan).size
+    Shape(count("Exchange (hash|range|Single)"), count("CartesianProduct"),
+      count("BroadcastNestedLoopJoin"))
+  }
+
   /** One digest line per registered query: shuffle/broadcast exchange
     * counts, join operators, scan count + how many scans carry non-empty
     * pushed filters, and whole-stage-codegen span count — the facts the
@@ -39,7 +51,6 @@ object PlanAudit {
     // throw from the unpersist loop or a println would otherwise leave
     // AQE disabled for the rest of the session
     try {
-      val shuffleRe = "Exchange (hash|range|Single)".r
       val wscRe = """\*\((\d+)\)""".r
       println("| query | shuffles | bcast | BHJ | SMJ | SHJ | BNLJ | cart | scans | pushed | codegen |")
       println("|---|---|---|---|---|---|---|---|---|---|---|")
@@ -47,14 +58,14 @@ object PlanAudit {
         try {
           val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
           def c(s: String) = s.r.findAllIn(plan).size
-          val shuffles = shuffleRe.findAllIn(plan).size
+          val sh = shape(plan)
           val spans = wscRe.findAllMatchIn(plan).map(_.group(1).toInt).toSet.size
           val scans = c("FileScan parquet") + c("Scan parquet")
           val pushed = "PushedFilters: \\[[^\\]]".r.findAllIn(plan).size
-          println(s"| $name | $shuffles | ${c("BroadcastExchange")} | " +
+          println(s"| $name | ${sh.shuffles} | ${c("BroadcastExchange")} | " +
             s"${c("BroadcastHashJoin")} | ${c("SortMergeJoin")} | " +
-            s"${c("ShuffledHashJoin")} | ${c("BroadcastNestedLoopJoin")} | " +
-            s"${c("CartesianProduct")} | $scans | $pushed | $spans |")
+            s"${c("ShuffledHashJoin")} | ${sh.bnljs} | " +
+            s"${sh.cartesians} | $scans | $pushed | $spans |")
         } catch {
           case e: Throwable => println(s"| $name | ERROR ${e.getMessage} |")
         }

@@ -96,10 +96,7 @@ object Incremental {
       tsCol: String,
       valueCol: String): Unit = {
     val days = dailyState(batch, keys, tsCol, valueCol)
-    StoreSwap.recover(spark, path, depth = 1)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) days.write.partitionBy("dt").parquet(path)
+    if (!StoreSwap.recover(spark, path, depth = 1)) days.write.partitionBy("dt").parquet(path)
     else StoreSwap.swapIn(spark, path, depth = 1) { tmp =>
       days.write.partitionBy("dt").parquet(tmp)
     }
@@ -140,10 +137,7 @@ object Incremental {
     // (the exactly-once-by-partition-identity contract is unchanged),
     // but a crash or a racing reader now always sees a complete
     // generation, which dynamic overwrite's delete-at-commit did not give
-    StoreSwap.recover(spark, path, depth = 2)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root))
+    if (!StoreSwap.recover(spark, path, depth = 2))
       partials.write.partitionBy("dt", "batch_id").parquet(path)
     else StoreSwap.swapIn(spark, path, depth = 2) { tmp =>
       partials.write.partitionBy("dt", "batch_id").parquet(tmp)
@@ -190,10 +184,9 @@ object Incremental {
     require(maxBatchesPerDay >= 1, "maxBatchesPerDay must be >= 1")
     // same preamble as the upserts: a maintainer starting on a crashed
     // store must see a complete generation before it lists fragmentation
-    StoreSwap.recover(spark, path, depth = 2)
+    if (!StoreSwap.recover(spark, path, depth = 2)) return Seq.empty
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
     val dayDirs = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
     val fragmented = dayDirs.filter { d =>

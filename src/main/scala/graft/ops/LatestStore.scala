@@ -60,10 +60,7 @@ object LatestStore {
     // untouched buckets are adopted by rename — a crash at any point
     // leaves a complete generation, where dynamic overwrite deleted the
     // touched directories before its own commit
-    StoreSwap.recover(spark, path, depth = 1)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
+    if (!StoreSwap.recover(spark, path, depth = 1)) {
       flat.write.partitionBy("bucket").parquet(path)
     } else {
       val affected = flat.select(col("bucket")).distinct()

@@ -326,10 +326,7 @@ object Sketch {
     // generational commit via the shared StoreSwap protocol (this store
     // is where the pattern started); depth 0 — the store is flat, every
     // generation is complete, adoption is vacuous
-    StoreSwap.recover(spark, path, depth = 0)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) incoming.write.parquet(path)
+    if (!StoreSwap.recover(spark, path, depth = 0)) incoming.write.parquet(path)
     else {
       val merged = quantileMergeRegisters(
         spark.read.parquet(path).unionByName(incoming), groupCols, k)

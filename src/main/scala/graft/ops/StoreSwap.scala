@@ -140,16 +140,18 @@ object StoreSwap {
   /** Crash-recovery preamble: promote the newest complete generation if
     * the live path is missing, finish any interrupted adoption, and clear
     * stale tmp generations. Safe (and cheap — three existence probes) to
-    * run unconditionally before every upsert.
+    * run unconditionally before every upsert. Returns whether a live
+    * generation exists afterwards (false: the store was never written).
     */
-  def recover(spark: SparkSession, path: String, depth: Int): Unit = {
+  def recover(spark: SparkSession, path: String, depth: Int): Boolean = {
     val (fs, p) = fsOf(spark, path)
     val (tmp, prev) = (tmpOf(path), prevOf(path))
     if (!fs.exists(p)) {
       if (fs.exists(new Path(tmp, "_SUCCESS"))) fs.rename(tmp, p)
       else if (fs.exists(prev)) fs.rename(prev, p)
     }
-    if (fs.exists(p)) {
+    val live = fs.exists(p)
+    if (live) {
       if (fs.exists(prev)) {
         // finish the interrupted adoption at the depth the interrupted
         // swap recorded (a compaction swap on an upsert-depth store, or
@@ -160,6 +162,7 @@ object StoreSwap {
       if (fs.exists(tmp)) fs.delete(tmp, true)
       fs.delete(new Path(p, DepthMarker), false) // stale marker, if any
     }
+    live
   }
 
   /** Commit a new generation: `write` must fully commit the REPLACED

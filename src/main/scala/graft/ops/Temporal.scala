@@ -223,10 +223,7 @@ object Temporal {
     // generational commit (StoreSwap — the quantile store's tmp/prev
     // swap): merged buckets commit to a sibling, untouched buckets adopt
     // by rename; a crash at any point leaves a complete generation
-    StoreSwap.recover(spark, path, depth = 1)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
+    if (!StoreSwap.recover(spark, path, depth = 1)) {
       withBucket.write.partitionBy("bucket").parquet(path)
     } else {
       val affected = withBucket.select("bucket").distinct()
@@ -280,10 +277,9 @@ object Temporal {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
     // same preamble as the upserts: a maintainer starting on a crashed
     // store must see a complete generation before it lists fragmentation
-    StoreSwap.recover(spark, path, depth = 1)
+    if (!StoreSwap.recover(spark, path, depth = 1)) return Seq.empty
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
     val fragmented = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
       .filter(b => fs.listStatus(b.getPath)

@@ -1042,7 +1042,7 @@ class PipelineOpsSpec extends SparkTestBase {
       (7L, short),       // D: too few kept words -> Gopher kills it
       (8L, base)         // F: %4==0 gets the blocked javascript line -> filtered, doc survives
     ).toDF("doc_id", "text")
-    val out = graft.SparkEntry.crawlFullPipeline(df).collect()
+    val out = graft.queries.PipelineQueries.crawlFullPipeline(df).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getDouble(3),
         r.getLong(4), r.getLong(5), r.getInt(6), r.getLong(7)))
     val byDoc = out.groupBy(_._1)
@@ -1073,9 +1073,9 @@ class PipelineOpsSpec extends SparkTestBase {
     }
     // the blocked line never leaks into any stage: re-run stage 1+2 alone
     val lined = graft.ops.TextAnalysis.filterLines(
-      graft.SparkEntry.withSyntheticLines(
+      graft.queries.TextQueries.withSyntheticLines(
         graft.ops.TextAnalysis.extractHtmlText(
-          graft.SparkEntry.withSyntheticHtml(df.filter(col("doc_id") === 8L)),
+          graft.queries.TextQueries.withSyntheticHtml(df.filter(col("doc_id") === 8L)),
           "doc_id", "text")
           .select(col("doc_id"), col("text_extracted").as("text"))),
       "doc_id", "text").select("text_kept").head().getString(0)
