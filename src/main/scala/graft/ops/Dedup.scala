@@ -623,29 +623,21 @@ object Dedup {
       .select(col("id"), col("id").as("cluster"))
     // `p` and the final labels checkpoint stay persisted — the returned
     // (lazy) plan reads them
-    val res = Fixpoint.iterate(labels0, maxIterations) { (prev, i) =>
+    val res = Fixpoint.iterate(labels0, maxIterations) { (prev, _) =>
       val labels = prev.drop("_old")
       // candidate label for dst = min label among neighbors' current labels
       val viaNeighbors = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
         .agg(min(col("cluster")).as("_nb"))
-      // the convergence metric rides the checkpoint materialization job
-      // (Dataset.observe) — no separate count() pass per iteration; _old is
+      // the changed-label count rides the checkpoint's own job; _old is
       // carried so the comparison is row-local
-      val obs = new Observation(s"graft_cc_$i")
-      val next = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("_nb"), col("cluster"))).as("cluster"),
-          col("cluster").as("_old"))
-        .observe(obs,
-          sum(when(col("cluster") =!= col("_old"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint() // truncate the growing iterative lineage
-      val changed = scala.util.Try(
-        scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration("30s"))
-          .getAs[Long]("changed"))
-        .getOrElse(// listener didn't fire for this action shape: count instead
-          next.filter(col("cluster") =!= col("_old")).count())
+      val (next, changed) = Fixpoint.observedCheckpoint(
+        labels.join(viaNeighbors, Seq("id"), "left")
+          .select(col("id"),
+            least(col("cluster"), coalesce(col("_nb"), col("cluster"))).as("cluster"),
+            col("cluster").as("_old")),
+        sum(when(col("cluster") =!= col("_old"), 1L).otherwise(0L)))
       (next, changed == 0L)
     }
     // singletons (no edges) are their own cluster
@@ -678,8 +670,9 @@ object Dedup {
     * Shape at 100 TB: each round is two narrow (src, dst) aggregations +
     * equality joins, map-side combinable, edge-set-sized — never touches
     * payloads; each round's edges checkpoint through [[Fixpoint.iterate]].
-    * Convergence check: edge count + one `except` when counts match —
-    * exact set equality, edge-set-sized.
+    * Convergence check: the edge count, observed by the round's checkpoint
+    * job ([[Fixpoint.observedCheckpoint]]), + one `except` when counts
+    * match — exact set equality, edge-set-sized.
     */
   def connectedComponentsLS(
       ids: DataFrame, // column: id
@@ -693,15 +686,14 @@ object Dedup {
       ids: DataFrame,
       pairs: DataFrame,
       maxIterations: Int = 20): (DataFrame, Int, () => Unit) = {
-    val edges0 = pairs
+    val (edges0, n0) = Fixpoint.observedCheckpoint(pairs
       .filter(col("a_id") =!= col("b_id"))
       .select(greatest(col("a_id"), col("b_id")).as("src"),
         least(col("a_id"), col("b_id")).as("dst"))
-      .distinct()
-      .localCheckpoint()
-    var prevCount = edges0.count()
+      .distinct(), count(lit(1)))
+    var prevCount = n0
     val maxRounds = if (prevCount == 0L) 0 else maxIterations
-    val res = Fixpoint.iterate(edges0, maxRounds) { (edges, round) =>
+    val res = Fixpoint.iterate(edges0, maxRounds, ownsInit = true) { (edges, _) =>
       // LARGE-STAR over symmetric neighborhoods: m_u = min(Γ(u) ∪ {u});
       // every strictly-larger neighbor re-points at m_u
       val nb = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -716,18 +708,13 @@ object Dedup {
       // SMALL-STAR on the now larger→smaller directed edges: each node's
       // smaller neighbors (and the node itself) re-point at its minimum
       val mTab2 = ls.groupBy(col("src")).agg(min(col("dst")).as("_m"))
-      val ss = ls.join(mTab2, "src")
+      val (ss, n) = Fixpoint.observedCheckpoint(ls.join(mTab2, "src")
         .select(col("dst").as("x"), col("_m"))
         .union(mTab2.select(col("src").as("x"), col("_m")))
         .filter(col("x") =!= col("_m"))
         .select(col("x").as("src"), col("_m").as("dst"))
-        .distinct()
-        .localCheckpoint()
-      val n = ss.count() // materializes the checkpoint
+        .distinct(), count(lit(1)))
       val converged = n == prevCount && ss.except(edges).count() == 0L
-      // the deduplicated pair list is this loop's init, which iterate
-      // never releases: it goes once round 1's edges exist
-      if (round == 0) org.apache.spark.sql.graft.CheckpointUtil.unpersist(edges0)
       prevCount = n
       (ss, converged)
     }
@@ -735,9 +722,7 @@ object Dedup {
     val lbl = res.last.groupBy(col("src").as("id")).agg(min(col("dst")).as("cluster"))
     val result = ids.join(lbl, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    (result, res.rounds,
-      if (res.rounds == 0) () => org.apache.spark.sql.graft.CheckpointUtil.unpersist(edges0)
-      else res.release)
+    (result, res.rounds, res.release)
   }
 
   /** Deterministic random hyperplanes for sign-bucket LSH (seeded, so results

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.graft.CheckpointUtil
 
 /** The checkpointed fixpoint loop every iterative operator runs on
@@ -8,15 +8,16 @@ import org.apache.spark.sql.graft.CheckpointUtil
   * BPE and WordPiece training). Each round's `localCheckpoint` truncates
   * the growing lineage; `iterate` owns releasing the superseded rounds'
   * blocks, so executor storage holds two generations (three for one step
-  * of a lazy loop), not one per round.
+  * of a lazy loop), not one per round, and [[observedCheckpoint]] owns
+  * reading a round's convergence value.
   *
   * The release rule: a generation `step` returned is released as soon as
   * a newer generation's checkpoint has materialized. Eager checkpoints
   * materialize inside `step`; a lazy one (`localCheckpoint(false)`)
   * materializes with the first action over it, normally the next step's.
-  * `init` is never released — it may be a projection of a frame the
-  * caller keeps reading (PageRank's initial rank reads the node table);
-  * a caller whose `init` is its own checkpoint releases it inside `step`.
+  * `init` follows the same rule only when the caller passes `ownsInit`:
+  * otherwise it may be a projection of a frame the caller keeps reading
+  * (PageRank's initial rank reads the node table), and stays untouched.
   */
 object Fixpoint {
 
@@ -30,11 +31,13 @@ object Fixpoint {
     * reports convergence or `maxIter` rounds have run. `step` returns the
     * next generation — a `localCheckpoint` handle, or `current` itself when
     * there is nothing left to do — and whether the loop has converged.
+    * `ownsInit` says `init` is the caller's own checkpoint, released like
+    * any other generation (by `release()` if the loop never supersedes it).
     */
-  def iterate(init: DataFrame, maxIter: Int)(
+  def iterate(init: DataFrame, maxIter: Int, ownsInit: Boolean = false)(
       step: (DataFrame, Int) => (DataFrame, Boolean)): Result = {
     var cur = init
-    var held = Vector.empty[DataFrame] // step's generations, oldest first
+    var held = if (ownsInit) Vector(init) else Vector.empty[DataFrame] // oldest first
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxIter) {
@@ -51,5 +54,21 @@ object Fixpoint {
     }
     val live = held
     Result(cur, rounds, () => live.foreach(CheckpointUtil.unpersist(_)))
+  }
+
+  /** Eagerly checkpoints `df` and returns the checkpoint with the value of
+    * `metric` (an aggregate over `df`'s rows, e.g. a row count) read from
+    * that checkpoint's own job through `Dataset.observe`, so a round's
+    * convergence test costs no extra job. Should the observation not
+    * arrive, `metric` is re-aggregated over the checkpoint instead. A NULL
+    * aggregate (a sum over no rows) reads as 0.
+    */
+  def observedCheckpoint(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val obs = new Observation()
+    val ckpt = df.observe(obs, metric).localCheckpoint()
+    val value = scala.util.Try(
+      scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration("30s")).get(0))
+      .getOrElse(ckpt.agg(metric).head().get(0))
+    (ckpt, if (value == null) 0L else value.asInstanceOf[Number].longValue)
   }
 }

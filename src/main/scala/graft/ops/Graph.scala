@@ -291,12 +291,11 @@ object Graph {
       maxRounds: Int = 40): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val und = edges
+    val (und, nUnd) = Fixpoint.observedCheckpoint(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), count(lit(1)))
     // r20 NOTE — incremental peeling attempted and REVERTED with numbers:
     // maintaining degrees by per-endpoint loss subtraction (mark both
     // endpoints against the peel set, aggregate losses over dropped edges
@@ -308,24 +307,19 @@ object Graph {
     // latency: measured 9.4–12.5 s against this form's 5.8 s at sf0.1.
     // AQE's runtime broadcast conversion also still pays the big side's
     // shuffle WRITE, so even the shuffle saving was partial. The simple
-    // form below keeps one heavy pipelined job + one trivial count per
-    // round.
-    var nLive = und.count()
+    // form below keeps one heavy pipelined job per round, whose checkpoint
+    // also observes the surviving edge count.
+    var nLive = nUnd
     val peels = if (nLive == 0L) 0 else maxRounds
-    val core = Fixpoint.iterate(und, peels) { (live, round) =>
+    val core = Fixpoint.iterate(und, peels, ownsInit = true) { (live, _) =>
       val deg = live.select(col("a").as("id"))
         .unionByName(live.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select(col("id"))
-      val next = live
+      val (next, n) = Fixpoint.observedCheckpoint(live
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint()
-      val n = next.count()
-      // the input edge list is this loop's init, which iterate never
-      // releases: it goes once round 1's survivors exist
-      if (round == 0) org.apache.spark.sql.graft.CheckpointUtil.unpersist(und)
+        .select(col("a"), col("b")), count(lit(1)))
       val done = n == nLive
       nLive = n
       (next, done)

@@ -293,7 +293,7 @@ object Stats {
     // partial sums are the whole cost of this operator, and a single-row-
     // group input would otherwise run them on one core (no-op on any
     // multi-split scan — see spread's contract)
-    val g = spread(df.select(cols.map(col): _*)).agg(aggs.head, aggs.tail: _*)
+    val g = Par.spread(df.select(cols.map(col): _*)).agg(aggs.head, aggs.tail: _*)
     val n = col("_n").cast(dec)
     val rows = pairs.map { case (a, b) =>
       val num = (n * col(s"_p_${a}_${b}") - col(s"_s_$a") * col(s"_s_$b")).cast("double")
@@ -354,12 +354,6 @@ object Stats {
       case d: DecimalType => d.scale == 0 && d.precision <= 18
       case _ => false
     })) "long" else "decimal(38,0)"
-
-  /** See [[Par.spread]] — promoted to a shared helper in r20 (the media
-    * synthesis and tokenizer-encode families have the same single-split
-    * scan shape); this alias keeps the call sites in this file unchanged.
-    */
-  private def spread(df: DataFrame): DataFrame = Par.spread(df)
 
   /** Range buckets per column for the two-phase rank derivation: 255
     * boundaries → 256 buckets of roughly equal DISTINCT-value count.
@@ -871,7 +865,7 @@ object Stats {
     // in-row melt: k (feature, value, class) entries per row; per-feature
     // NULL drop happens after the explode so each feature keeps its own
     // observed subset
-    val cells = spread(df
+    val cells = Par.spread(df
       .filter(col(targetCol).isNotNull)
       .select(col(targetCol).cast("string").as("_t") +:
         featureCols.map(f => col(f).cast("string").as(f)): _*))

@@ -1701,20 +1701,13 @@ object TextAnalysis {
     */
   private def mergeRanks(words0: DataFrame, numMerges: Int)(
       pick: (DataFrame, Int) => Option[Column]): Unit = {
-    val res = Fixpoint.iterate(words0, numMerges) { (words, i) =>
-      val rewrite = pick(words, i + 1)
-      // pick's first action materialized rank 1's rewrite, so the seed
-      // table (this loop's init, which iterate never releases) can go
-      if (i == 1) org.apache.spark.sql.graft.CheckpointUtil.unpersist(words0)
-      rewrite match {
+    Fixpoint.iterate(words0, numMerges, ownsInit = true) { (words, i) =>
+      pick(words, i + 1) match {
         case Some(syms) =>
           (words.withColumn("syms", syms).localCheckpoint(false), false)
         case None => (words, true)
       }
-    }
-    res.release()
-    // a one-rank run never reached the seed release above
-    if (res.rounds < 2) org.apache.spark.sql.graft.CheckpointUtil.unpersist(words0)
+    }.release()
   }
 
   /** The WordPiece alphabet of a corpus: every word-initial character bare

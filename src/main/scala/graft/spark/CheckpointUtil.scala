@@ -22,9 +22,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * only once nothing will read it again: a locally-checkpointed RDD cannot
   * be recomputed, so any later action over it would fail.
   *
-  * Iterative operators do not call this per round: they run through
-  * [[graft.ops.Fixpoint.iterate]], which owns superseded-generation release
-  * (and reads [[materialized]] to time it).
+  * Iterative operators never call this themselves: they run through
+  * [[graft.ops.Fixpoint.iterate]], which owns releasing every generation,
+  * including a checkpointed init the loop owns (and reads [[materialized]]
+  * to time it).
   */
 object CheckpointUtil {
   def unpersist(ds: Dataset[_], blocking: Boolean = false): Unit =

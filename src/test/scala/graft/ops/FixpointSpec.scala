@@ -1,29 +1,73 @@
 package graft.ops
 
 import graft.SparkTestBase
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointUtil
 
 class FixpointSpec extends SparkTestBase {
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** `body`'s result and the number of jobs it submitted. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftListenerBus.waitUntilEmpty(sc, 30000)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      GraftListenerBus.waitUntilEmpty(sc, 30000)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("iterate: a superseded generation goes once a newer one has materialized") {
-    for (eager <- Seq(true, false)) {
+    // init is either a projection iterate must leave alone, or (ownsInit)
+    // the caller's own checkpoint, released like every other generation;
+    // stopAt 0 converges in round 0, maxIter 0 runs no round at all
+    for (eager <- Seq(true, false); owned <- Seq(false, true);
+         (maxIter, stopAt) <- Seq((6, 6), (6, 0), (0, 0))) {
       val before = persisted
+      val base = spark.range(50).toDF("v")
+      val init = if (owned) base.localCheckpoint() else base
       val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val res = Fixpoint.iterate(spark.range(50).toDF("v"), 6) { (cur, _) =>
+      val res = Fixpoint.iterate(init, maxIter, ownsInit = owned) { (cur, round) =>
         cur.agg(sum("v")).collect() // the round's first action
         seen += (persisted -- before).size
-        (cur.select((col("v") + 1).as("v")).localCheckpoint(eager), false)
+        if (round == stopAt) (cur, true)
+        else (cur.select((col("v") + 1).as("v")).localCheckpoint(eager), false)
       }
-      assert(res.rounds === 6)
-      assert(res.last.agg(sum("v")).head().getLong(0) === (6L until 56L).sum)
+      val rounds = math.min(maxIter, stopAt + 1)
+      val shift = math.min(maxIter, stopAt).toLong
+      val tag = s"eager=$eager owned=$owned maxIter=$maxIter stopAt=$stopAt"
+      assert(res.rounds === rounds, tag)
+      assert(res.last.agg(sum("v")).head().getLong(0) === (shift until 50L + shift).sum, tag)
       // an eager round's input is the only generation left; a lazy round
       // still holds the one it just materialized from
-      assert(seen.max === (if (eager) 1 else 2), s"eager=$eager: $seen")
+      if (stopAt > 0) assert(seen.max === (if (eager) 1 else 2), s"$tag: $seen")
       res.release()
-      assert((persisted -- before).isEmpty, s"eager=$eager")
+      assert((persisted -- before).isEmpty, tag)
+    }
+  }
+
+  test("observedCheckpoint: one job, a materialized checkpoint and agg(metric) over it") {
+    val metrics = Seq(count(lit(1)), sum(col("v")), sum(when(col("v") % 3 === 0, 1L)))
+    for (n <- Seq(20L, 0L); metric <- metrics) {
+      val df = spark.range(20).filter(col("id") < n).select((col("id") * 2).as("v"))
+      val ((ckpt, value), jobs) = jobsOf(Fixpoint.observedCheckpoint(df, metric))
+      val tag = s"n=$n metric=$metric"
+      assert(jobs === 1, tag)
+      assert(CheckpointUtil.materialized(ckpt), tag)
+      val agg = ckpt.agg(metric).head()
+      assert(value === (if (agg.isNullAt(0)) 0L else agg.getLong(0)), tag)
+      assert(ckpt.count() === n, tag)
+      CheckpointUtil.unpersist(ckpt)
     }
   }
 
@@ -37,34 +81,45 @@ class FixpointSpec extends SparkTestBase {
     // a path hanging off a triangle: the 2-core peels it one node a round
     val graph = (Seq((1L, 2L), (2L, 3L), (3L, 1L)) ++
       (3L until 8L).map(i => (i, i + 1))).toDF("src", "dst")
-    // (operator, result and its release hook, checkpoints the result reads)
-    val rows: Seq[(String, () => (DataFrame, Option[() => Unit]), Int)] = Seq(
+    // (operator, result and its release hook, checkpoints left persisted,
+    // jobs the call submits where pinned). The pins are measured: each
+    // round's convergence value rides its checkpoint's job, so neither
+    // kCore (6 rounds) nor LS (4 rounds, plus its exact `except` test) runs
+    // a count pass, which costs 2 jobs over a checkpoint
+    val rows: Seq[(String, () => (DataFrame, Option[() => Unit]), Int, Option[Int])] = Seq(
       ("trainBpeMerges",
-        () => (TextAnalysis.trainBpeMerges(docs, "text", numMerges = 8), None), 0),
+        () => (TextAnalysis.trainBpeMerges(docs, "text", numMerges = 8), None), 0, None),
       ("trainWordPieceMerges",
-        () => (TextAnalysis.trainWordPieceMerges(docs, "text", numMerges = 4), None), 0),
+        () => (TextAnalysis.trainWordPieceMerges(docs, "text", numMerges = 4), None), 0, None),
       // the edge list and the final labels
       ("connectedComponents", () => {
         val (out, release) = Dedup.connectedComponentsReleasable(ids, chain)
         (out, Some(release))
-      }, 2),
+      }, 2, None),
       // the final edges
       ("connectedComponentsLS", () => {
         val (out, _, release) = Dedup.connectedComponentsLSRounds(ids, chain)
         (out, Some(release))
-      }, 1),
+      }, 1, Some(45)),
       // the edge list with out-degrees, the node table and the final rank
-      ("pageRank", () => (Graph.pageRank(graph, "src", "dst"), None), 3),
+      ("pageRank", () => (Graph.pageRank(graph, "src", "dst"), None), 3, None),
       // the undirected edge list and the final labels
-      ("labelPropagation", () => (Graph.labelPropagation(graph, "src", "dst"), None), 2),
+      ("labelPropagation", () => (Graph.labelPropagation(graph, "src", "dst"), None), 2, None),
       // the final surviving edges
-      ("kCore", () => (Graph.kCore(graph, "src", "dst", k = 2), None), 1))
-    for ((name, run, retained) <- rows) {
+      ("kCore", () => (Graph.kCore(graph, "src", "dst", k = 2), None), 1, Some(20)))
+    for ((name, run, retained, pinnedJobs) <- rows) {
       val before = persisted
-      val (out, release) = run()
+      // the persisted RDDs themselves, held from the moment the call
+      // returns: a checkpoint the result does not read (PageRank's edge and
+      // node tables, label propagation's edge list) is otherwise freed
+      // whenever a GC lets the ContextCleaner reach it
+      val ((out, release, left), jobs) = jobsOf {
+        val (out, release) = run()
+        (out, release, spark.sparkContext.getPersistentRDDs -- before)
+      }
+      pinnedJobs.foreach(j => assert(jobs === j, s"$name submitted $jobs jobs"))
       assert(out.collect().nonEmpty, name)
-      val left = persisted -- before
-      assert(left.size === retained, s"$name left $left persisted")
+      assert(left.size === retained, s"$name left ${left.keySet} persisted")
       release.foreach { r =>
         r()
         assert((persisted -- before).isEmpty, s"$name after release()")

@@ -69,7 +69,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("orc source: write-read round-trip preserves rows and schema; json config round-trips") {
-    val out = "/root/repo/target/graft-scratch/spec_orc"
+    val out = "target/graft-scratch/spec_orc"
     val orig = spark.read.parquet(s"${sf()}/nation.parquet")
     orig.write.mode("overwrite").orc(out)
     val src = GraftSource.of(table = Some(out), format = SourceFormat.Orc)
