@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.graft.CheckpointUtil
 
 /** The checkpointed fixpoint loop every iterative operator runs on
@@ -64,11 +64,18 @@ object Fixpoint {
     * aggregate (a sum over no rows) reads as 0.
     */
   def observedCheckpoint(df: DataFrame, metric: Column): (DataFrame, Long) = {
-    val obs = new Observation()
-    val ckpt = df.observe(obs, metric).localCheckpoint()
-    val value = scala.util.Try(
-      scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration("30s")).get(0))
-      .getOrElse(ckpt.agg(metric).head().get(0))
-    (ckpt, if (value == null) 0L else value.asInstanceOf[Number].longValue)
+    val (ckpt, row) = observedCheckpoint(df, Seq(metric))
+    (ckpt, if (row.isNullAt(0)) 0L else row.getAs[Number](0).longValue)
+  }
+
+  /** [[observedCheckpoint]] for several aggregates at once, read as one row
+    * in `metrics` order (NULLs left as they are). */
+  def observedCheckpoint(df: DataFrame, metrics: Seq[Column]): (DataFrame, Row) = {
+    val name = s"graft_observed_${java.util.UUID.randomUUID}"
+    val observed = df.observe(name, metrics.head, metrics.tail: _*)
+    val ckpt = observed.localCheckpoint()
+    val row = observed.queryExecution.observedMetrics.getOrElse(name,
+      ckpt.agg(metrics.head, metrics.tail: _*).head())
+    (ckpt, row)
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointUtil
 
 /** Graph operators over edge lists. The curation use case sits next to
   * [[Url.domainCaps]]: a crawl's link graph ranks domains/pages by link
@@ -83,8 +84,10 @@ object Graph {
     * [[personalizedPageRank]]: `nodesT` carries each node's per-iteration
     * teleport term (`_tp`) and initial rank (`_r0`) — uniform for global
     * PageRank, seed-concentrated for the personalized form. Identical
-    * integer lane either way; `eDeg`, `nodes` and the final rank snapshot
-    * stay persisted — the returned plan reads them.
+    * integer lane either way. Only the final rank snapshot stays
+    * persisted: every round checkpoints eagerly, so once the loop returns
+    * the last generation has materialized and its truncated lineage no
+    * longer reaches `eDeg` or `nodes`, which are released then.
     */
   private def prLoop(
       eDeg: DataFrame,
@@ -95,7 +98,7 @@ object Graph {
     val nodes = nodesT.localCheckpoint()
     val rank0 = nodes.select(col("node"), col("_r0").as("rank"),
       (if (redistribute) col("_dg") else lit(false)).as("_dg"))
-    Fixpoint.iterate(rank0, iterations) { (rank, _) =>
+    val ranks = Fixpoint.iterate(rank0, iterations) { (rank, _) =>
       val contrib = eDeg
         .join(rank.select(col("node").as("src"), col("rank")), Seq("src"))
         .select(col("dst").as("node"), expr("rank div outdeg").as("_c"))
@@ -120,7 +123,9 @@ object Graph {
           (if (redistribute) col("_dg") else lit(false)).as("_dg"))
         .localCheckpoint()
       (next, false)
-    }.last.select(col("node"), col("rank"))
+    }.last
+    Seq(eDeg, nodes).foreach(CheckpointUtil.unpersist(_))
+    ranks.select(col("node"), col("rank"))
   }
 
   /** Personalized PageRank — [[pageRank]] with the teleport mass
@@ -219,8 +224,9 @@ object Graph {
     * with the labels table plus two keyed aggregations ((node, label) counts
     * then per-node arg-max) — all narrow (id, label, count) rows; the edge
     * list checkpoints once, each round's labels checkpoint to truncate
-    * lineage ([[Fixpoint.iterate]]); the edge list and the final labels
-    * stay persisted.
+    * lineage ([[Fixpoint.iterate]]). Only the final labels stay
+    * persisted: every round checkpoints eagerly, so the edge list is
+    * released once the loop returns.
     */
   def labelPropagation(
       edges: DataFrame,
@@ -239,7 +245,7 @@ object Graph {
     val labels0 = und.select(col("a").as("id"))
       .unionByName(und.select(col("b").as("id"))).distinct()
       .select(col("id"), col("id").as("community"))
-    Fixpoint.iterate(labels0, rounds) { (labels, _) =>
+    val communities = Fixpoint.iterate(labels0, rounds) { (labels, _) =>
       val next = nbrs
         .join(labels.select(col("id").as("src"), col("community")), Seq("src"))
         .groupBy(col("dst").as("id"), col("community"))
@@ -252,6 +258,8 @@ object Graph {
         .localCheckpoint()
       (next, false)
     }.last
+    CheckpointUtil.unpersist(und)
+    communities
   }
 
   /** k-core of an undirected simple graph — the maximal subgraph in which

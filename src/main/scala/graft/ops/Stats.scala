@@ -363,6 +363,33 @@ object Stats {
     */
   private val rankRangeBuckets = 256
 
+  /** The quantile levels i/256 whose sketch values are a column's 255
+    * range-bucket boundaries. */
+  private def rankBucketPcts: Column =
+    array((1 until rankRangeBuckets).map(i => lit(i.toDouble / rankRangeBuckets)): _*)
+
+  /** Range bucket of `v` = #{boundaries strictly below `v`} among the first
+    * `n` entries of the sorted array `bounds` — a BINARY-SEARCH when-tree
+    * (8 comparisons per row for 255 boundaries, fully codegen'd) instead of
+    * the original `aggregate` fold over all 255 elements: higher-order
+    * functions run interpreted with per-element lambda binding, and the
+    * fold alone measured 3.7 s of the 14 s isolated spearman_pairwise at
+    * sf0.1 (255 × 1.1M distinct values). lower_bound over a sorted array
+    * counts exactly #{b_i < v}, duplicates included, and the bucket only
+    * shapes BALANCE anyway: any order-preserving bucketing (equal values,
+    * equal bucket) yields the same ranks.
+    */
+  private def rangeBucket(v: Column, bounds: Column, n: Int): Column = {
+    def go(lo: Int, hi: Int): Column =
+      if (lo > hi) lit(0)
+      else {
+        val mid = (lo + hi) >>> 1
+        when(v > element_at(bounds, mid), lit(mid - lo + 1) + go(mid + 1, hi))
+          .otherwise(go(lo, mid - 1))
+      }
+    go(1, n)
+  }
+
   /** Doubled-average-rank table for a melted `(_c, _v)` stream: one row
     * per distinct (column, value) carrying `_dr = 2·(#strictly-below) +
     * #ties + 1` — the average rank doubled so ties stay integral.
@@ -388,15 +415,7 @@ object Stats {
     * bucketing gives the same ranks), so the approximate sketch is safe
     * by construction.
     */
-  private[ops] def doubledRanks(melted: DataFrame): DataFrame =
-    doubledRanksFromCounts(
-      melted.groupBy(col("_c"), col("_v")).agg(count(lit(1)).as("_cnt")))
-
-  /** [[doubledRanks]] over a PRE-COUNTED `(_c, _v, _cnt)` table — for
-    * callers that already hold per-(column, value) counts (the pairwise
-    * cell table derives them without a second corpus pass).
-    */
-  private[ops] def doubledRanksFromCounts(countsIn: DataFrame): DataFrame = {
+  private[ops] def doubledRanks(melted: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // EAGER checkpoint (r19): the counts table is referenced by the
     // boundary sketch, the bucketing join, the offsets aggregation and
@@ -412,33 +431,14 @@ object Stats {
     // executor-local storage — the deliberate trade against re-running the
     // corpus melt 4×; the table is narrow (column tag, value, count), and
     // the same bound already governs the rank join-backs downstream.
-    val counts = countsIn
+    val counts = melted.groupBy(col("_c"), col("_v")).agg(count(lit(1)).as("_cnt"))
       // bucket on the DOUBLE image of the value: monotone (adjacent
       // decimals collapsing to one double just share a bucket), and it
       // keeps the quantile sketch in its native domain
       .withColumn("_vd", col("_v").cast("double"))
       .localCheckpoint()
-    val pcts = array((1 until rankRangeBuckets).map(i =>
-      lit(i.toDouble / rankRangeBuckets)): _*)
     val bounds = counts.groupBy(col("_c"))
-      .agg(percentile_approx(col("_vd"), pcts, lit(10000)).as("_bnds"))
-    // bucket index = #{boundaries strictly below the value} — computed by a
-    // BINARY-SEARCH when-tree over the sorted boundary array (8 comparisons
-    // per row, fully codegen'd) instead of the original `aggregate` fold
-    // over all 255 elements: higher-order functions run interpreted with
-    // per-element lambda binding, and the fold alone measured 3.7 s of the
-    // 14 s isolated spearman_pairwise at sf0.1 (255 × 1.1M distinct values).
-    // Identical _rb to the fold — lower_bound over a sorted array counts
-    // exactly #{b_i < v}, duplicates included — and _rb only shapes bucket
-    // BALANCE anyway (any order-preserving bucketing yields the same ranks).
-    def lowerBound(lo: Int, hi: Int): Column =
-      if (lo > hi) lit(0)
-      else {
-        val mid = (lo + hi) >>> 1
-        when(col("_vd") > element_at(col("_bnds"), mid),
-          lit(mid - lo + 1) + lowerBound(mid + 1, hi))
-          .otherwise(lowerBound(lo, mid - 1))
-      }
+      .agg(percentile_approx(col("_vd"), rankBucketPcts, lit(10000)).as("_bnds"))
     // NOT checkpointed (r19): offsets and the in-bucket window both read
     // the bucketed table, but it derives deterministically from the
     // checkpointed counts + the boundary aggregate, and with the
@@ -448,7 +448,7 @@ object Stats {
     // the whole derivation: counts + bucketed + ranks = three back-to-back
     // jobs before the query proper even started).
     val bucketed = counts.join(broadcast(bounds), Seq("_c"))
-      .withColumn("_rb", lowerBound(1, rankRangeBuckets - 1))
+      .withColumn("_rb", rangeBucket(col("_vd"), col("_bnds"), rankRangeBuckets - 1))
       .drop("_bnds", "_vd")
     val offsets = bucketed.groupBy(col("_c"), col("_rb"))
       .agg(sum(col("_cnt")).as("_bt"))
@@ -556,113 +556,164 @@ object Stats {
     * per-pair and no observation is wasted. The price is the classic
     * statistics caveat (different pairs see different row subsets — the
     * matrix need not be positive semidefinite) and an O(k²) work blowup:
-    * the melt carries 2·C(k,2) entries per row, so prefer the listwise
+    * the melt carries C(k,2) entries per row, so prefer the listwise
     * form for wide dense matrices and this one for sparse/narrow ones.
     *
-    * Ranks come from the same two-phase [[doubledRanks]] machinery keyed
-    * by (pair, side) instead of column — the identical scale posture —
-    * and each pair's moment chain is EXACTLY [[correlations]] over its
-    * doubled ranks. Every pair emits a row: a pair with zero complete
-    * rows reads n = 0 with a NULL rho (the zero-variance convention),
-    * never a vanished row.
+    * Ranks come straight off the CELL table (distinct (pair, x, y) with
+    * their row count `_cw`) through windows. In a (pair, x-bucket)
+    * partition ordered by x, two RANGE frames give each cell the pair's
+    * rows with x' ≤ x (`cum`) and x' = x (`ties`), so its doubled average
+    * x-rank is `2·(offset + cum) − ties + 1`, with `offset` the pair's rows
+    * in lower x-buckets; the y side is the same over (pair, y-bucket).
+    * Buckets are order-preserving value ranges ([[rangeBucket]] over a
+    * quantile sketch of the column's cell values), so equal values share
+    * a bucket and any boundaries give the same ranks. Offsets never reach
+    * a cell: a rank is linear in its offset, so the moments first sum per
+    * (pair, x-bucket, y-bucket) grid row, which then adds its offsets'
+    * terms exactly (Σ cw·(e + o)² = Σ cw·e² + 2o·Σ cw·e + o²·Σ cw). The
+    * per-pair DECIMAL(38,0) sums are therefore the integers
+    * [[correlations]] sums over the doubled ranks, and rho is its closed
+    * form on them (round 6, zero variance → NULL). Every pair emits a row:
+    * a pair with zero complete rows reads n = 0 with a NULL rho, never a
+    * vanished row.
     *
-    * Shape at 100 TB: pair-melt in-row (2·C(k,2) entries/row) →
-    * per-(pair, side, value) count agg → bucketed rank table joins back
-    * (value tables broadcast while small, re-key at scale) → ONE
-    * (pair)-grouped moment agg. No row key needed — pairwise never
-    * re-pivots.
+    * Shape at 100 TB: ONE corpus pass, the pair expand aggregating into
+    * the cell table, whose eager checkpoint is the only build-time
+    * barrier. That checkpoint's own job also observes the cell count,
+    * which sets the bucket count B (a power of two, one bucket per 2¹⁴
+    * cells, at most 256), and each column's boundary sketch. The query
+    * then runs three exchanges: cells by (pair, x-bucket) for the x
+    * window; by (pair, y-bucket) for the y window, a partitioning that
+    * already clusters the grid aggregation; and the ≤ B² grid rows by pair
+    * for the offset windows, which feed the per-pair sums in place. The
+    * largest sort is one window partition: ~1/B of its pair's cells, but
+    * never fewer than the cells of the pair's most frequent value on that
+    * side, because one value's cells cannot split across buckets (for a
+    * low-cardinality column against a continuous one, the partner's
+    * distinct count per value). The offset windows, partitioned by pair
+    * alone, sort at most B² = 65,536 grid rows. At B = 1 the bucket key is
+    * a constant, so both sides' windows share one exchange by pair and
+    * sort at most 2¹⁴ cells each.
     */
-  def spearmanPairwise(df: DataFrame, cols: Seq[String]): DataFrame = {
+  def spearmanPairwise(df: DataFrame, cols: Seq[String]): DataFrame =
+    spearmanPairwise(df, cols, rankBuckets)
+
+  /** Cells per range bucket of [[spearmanPairwise]]'s rank windows. */
+  private val rankCellsPerBucket = 1L << 14
+
+  /** Range buckets for an observed cell count: the smallest power of two
+    * leaving at most [[rankCellsPerBucket]] cells a bucket, capped at
+    * [[rankRangeBuckets]]. */
+  private def rankBuckets(cells: Long): Int =
+    Iterator.iterate(1)(_ * 2)
+      .find(b => b == rankRangeBuckets || b * rankCellsPerBucket >= cells).get
+
+  /** [[spearmanPairwise]] with the rule mapping the observed cell count to
+    * the bucket count (a divisor of [[rankRangeBuckets]]) given. */
+  private[ops] def spearmanPairwise(
+      df: DataFrame,
+      cols: Seq[String],
+      buckets: Long => Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     require(cols.size >= 2, "need at least two columns")
     require(cols.distinct.size == cols.size, "columns must be distinct")
     requireIntegralCols(df, cols, "spearmanPairwise")
     val dec = "decimal(38,0)"
     val lane = valueLane(df, cols)
-    val spark = df.sparkSession
-    val pairs = for { i <- cols.indices; j <- (i + 1) until cols.size }
-      yield (cols(i), cols(j))
-    val pairRows = df
-      .select(explode(array(pairs.map { case (a, b) =>
-        struct(lit(a).as("cx"), lit(b).as("cy"),
-          col(a).cast(lane).as("vx"), col(b).cast(lane).as("vy")) }: _*))
-        .as("_p"))
-      .select(col("_p.cx").as("_cx"), col("_p.cy").as("_cy"),
-        col("_p.vx").as("_vx"), col("_p.vy").as("_vy"))
+    // pair p ranks column xs(p) against ys(p); cells carry p, not names
+    val (xs, ys) =
+      (for { i <- cols.indices; j <- (i + 1) until cols.size } yield (i, j)).unzip
+    // CELL TABLE (r20, the kendallTau discipline): the corpus is touched
+    // ONCE — the pair expand aggregates straight into distinct (pair, vx,
+    // vy) cells with their multiplicity — and every downstream step runs
+    // at cell size; a fully-tied pair collapses to its grid, and map-side
+    // partials absorb the hot cells before the one corpus exchange.
+    val cells = df
+      .select(explode(array(xs.indices.map(p =>
+        struct(lit(p).as("p"), col(cols(xs(p))).cast(lane).as("x"),
+          col(cols(ys(p))).cast(lane).as("y"))): _*)).as("_e"))
+      .select(col("_e.p").as("_p"), col("_e.x").as("_vx"), col("_e.y").as("_vy"))
       .filter(col("_vx").isNotNull && col("_vy").isNotNull)
-    // rank each side within its pair: (pair, side) is the rank "column".
-    // a NUL separator joins the key parts unambiguously (column names can't carry it)
-    def sideKey(side: String) =
-      concat_ws("\u0000", col("_cx"), col("_cy"), lit(side))
-    // CELL TABLE (r20, the kendallTau discipline applied here): the corpus
-    // is touched ONCE — the pair expand aggregates straight into distinct
-    // (pair, vx, vy) cells with their multiplicity — and every downstream
-    // step runs at cell size. This replaces the r19 shape, which ran TWO
-    // corpus passes (one melt feeding the rank build, one pair stream
-    // feeding the join-backs) and probed the rank joins with corpus rows —
-    // the admitted skew tail: for a low-cardinality column a handful of
-    // (side, value) keys carried the whole corpus through single
-    // partitions (the 10→17 s local variance). Cells bound any
-    // (side, value) join group by the PARTNER column's observed distinct
-    // count instead of its row count, and a fully-tied pair (the heavy-tie
-    // regime) collapses to its grid. Map-side partials absorb the hot
-    // cells before the one corpus exchange. Moments are weighted by the
-    // exact integer cell count — identical sums term for term, so rho is
-    // bit-identical.
-    val cells = pairRows
-      .groupBy(col("_cx"), col("_cy"), col("_vx"), col("_vy"))
+      .groupBy(col("_p"), col("_vx"), col("_vy"))
       .agg(count(lit(1)).as("_cw"))
-      // lazy checkpoint: the rank build below materializes it on its first
-      // job; the moment join then re-reads the persisted cells — one
-      // corpus pass total, deterministically (the r19 reuse lesson)
-      .localCheckpoint(false)
-    val counts = cells
-      .select(sideKey("x").as("_c"), col("_vx").as("_v"), col("_cw"))
-      .unionByName(cells
-        .select(sideKey("y").as("_c"), col("_vy").as("_v"), col("_cw")))
-      .groupBy(col("_c"), col("_v")).agg(sum(col("_cw")).as("_cnt"))
-    // the rank table feeds BOTH join-backs (x and y side): materialize it
-    // once — without the cut each side's plan branch re-derives the whole
-    // window chain (measured r19: the two broadcast subtrees each carried
-    // the full bucketed→window pipeline; exchange reuse never fired).
-    // SHUFFLE_HASH for the join-backs, deliberately: the build side is the
-    // dimension-sized rank table (fits per-partition hash maps at any
-    // scale), while BROADCAST of a ~10⁶-row rank table measured SLOWER at
-    // sf0.1 (two driver-side builds; 5.0 s vs 3.7 s isolated) and stops
-    // being possible at 100 TB where distinct values ≈ row count — the
-    // hint keeps the same plan shape at every scale instead of flipping
-    // strategy on the broadcast-threshold estimate.
-    val ranks = doubledRanksFromCounts(counts).localCheckpoint()
-    val rX = ranks.select(
-      col("_c").as("_kx"), col("_v").as("_vx"), col("_dr").as("_drx"))
-    val rY = ranks.select(
-      col("_c").as("_ky"), col("_v").as("_vy"), col("_dr").as("_dry"))
-    val joined = cells
-      .withColumn("_kx", sideKey("x")).withColumn("_ky", sideKey("y"))
-      .join(rX.hint("SHUFFLE_HASH"), Seq("_kx", "_vx"))
-      .join(rY.hint("SHUFFLE_HASH"), Seq("_ky", "_vy"))
+    // column c's cell values, on whichever side of a pair it sits
+    def valuesOf(c: Int): Column =
+      when(col("_p").isin(xs.indices.filter(xs(_) == c): _*), col("_vx"))
+        .when(col("_p").isin(ys.indices.filter(ys(_) == c): _*), col("_vy"))
+        .cast("double")
+    // accuracy 2,560 = each boundary within ~1/10 of a bucket of its target
+    // rank, and a sketch of a few tens of KB: every task of the cell
+    // aggregation ships one per column to the driver
+    val (ckpt, seen) = Fixpoint.observedCheckpoint(cells, count(lit(1)) +:
+      cols.indices.map(c =>
+        percentile_approx(valuesOf(c), rankBucketPcts, lit(10 * rankRangeBuckets))))
+    val nb = buckets(seen.getLong(0))
+    require(nb >= 1 && rankRangeBuckets % nb == 0,
+      s"bucket count $nb must divide $rankRangeBuckets")
+    // every (256/nb)-th sketch value; a column without cells has no sketch
+    // and no cell to bucket, so any sorted stand-in serves
+    val bounds = cols.indices.map { c =>
+      val sketch = Option(seen.getSeq[Double](c + 1))
+        .getOrElse(Seq.fill(rankRangeBuckets - 1)(0.0))
+      (1 until nb).map(b => sketch(b * (rankRangeBuckets / nb) - 1))
+    }
+    // a side's bucket, in a projection of its own: two sides' 255-node
+    // lookup trees in one projection overflow the 64 KB codegen limit
+    def withBucket(t: DataFrame, side: Seq[Int], v: String, rb: String): DataFrame =
+      if (nb == 1) t.withColumn(rb, lit(0))
+      else t
+        .withColumn("_bnd", element_at(typedLit(side.map(bounds)), col("_p") + 1))
+        .withColumn("_vd", col(v).cast("double"))
+        .withColumn(rb, rangeBucket(col("_vd"), col("_bnd"), nb - 1))
+        .drop("_bnd", "_vd")
+    // doubled rank within the bucket: 2·(rows ≤ v) − (rows = v) + 1
+    def withRank(t: DataFrame, v: String, rb: String, r: String): DataFrame = {
+      val w = Window.partitionBy(col("_p"), col(rb)).orderBy(col(v))
+      t.withColumn(r, lit(2L) *
+        sum(col("_cw")).over(w.rangeBetween(Window.unboundedPreceding, Window.currentRow)) -
+        sum(col("_cw")).over(w.rangeBetween(Window.currentRow, Window.currentRow)) + 1L)
+    }
+    val xRanked = withRank(withBucket(ckpt, xs, "_vx", "_rbx"), "_vx", "_rbx", "_ex")
+    val ranked = withRank(withBucket(xRanked, ys, "_vy", "_rby"), "_vy", "_rby", "_ey")
     val cw = col("_cw").cast(dec)
-    val dx = col("_drx").cast(dec)
-    val dy = col("_dry").cast(dec)
-    val g = joined.groupBy(col("_cx"), col("_cy"))
-      .agg(sum(col("_cw")).as("_n"),
-        sum(cw * dx).as("_sx"), sum(cw * dx * dx).as("_sxx"),
-        sum(cw * dy).as("_sy"), sum(cw * dy * dy).as("_syy"),
-        sum(cw * dx * dy).as("_sxy"))
-    // zero-complete-row pairs still emit: left-join the literal pair list
-    val allPairs = spark.range(1).select(
-      explode(array(pairs.map { case (a, b) =>
-        struct(lit(a).as("_cx"), lit(b).as("_cy")) }: _*)).as("_p"))
-      .select(col("_p._cx").as("_cx"), col("_p._cy").as("_cy"))
+    val ex = col("_ex").cast(dec)
+    val ey = col("_ey").cast(dec)
+    val zero = lit(0).cast(dec)
+    val grid = ranked.groupBy(col("_p"), col("_rbx"), col("_rby"))
+      .agg(sum(col("_cw")).as("_gn"),
+        sum(cw * ex).as("_gx"), sum(cw * ex * ex).as("_gxx"),
+        sum(cw * ey).as("_gy"), sum(cw * ey * ey).as("_gyy"),
+        sum(cw * ex * ey).as("_gxy"))
+      // a zero grid row per pair: a pair with no complete row reads n = 0
+      .unionByName(df.sparkSession.range(xs.size).select(
+        col("id").cast("int").as("_p"), lit(0).as("_rbx"), lit(0).as("_rby"),
+        lit(0L).as("_gn"), zero.as("_gx"), zero.as("_gxx"), zero.as("_gy"),
+        zero.as("_gyy"), zero.as("_gxy")))
+    // 2 · the pair's rows in lower buckets, over the pair's ≤ B² grid rows
+    def offset(rb: String): Column =
+      (lit(2L) * coalesce(sum(col("_gn")).over(Window.partitionBy(col("_p"))
+        .orderBy(col(rb)).rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .cast(dec)
+    val (gn, ox, oy) = (col("_gn").cast(dec), col("_ox"), col("_oy"))
+    val (gx, gy) = (col("_gx"), col("_gy"))
+    val g = grid.withColumn("_ox", offset("_rbx")).withColumn("_oy", offset("_rby"))
+      .groupBy(col("_p"))
+      .agg(sum(col("_gn")).as("_n"),
+        sum(gx + ox * gn).as("_sx"),
+        sum(col("_gxx") + lit(2) * ox * gx + ox * ox * gn).as("_sxx"),
+        sum(gy + oy * gn).as("_sy"),
+        sum(col("_gyy") + lit(2) * oy * gy + oy * oy * gn).as("_syy"),
+        sum(col("_gxy") + ox * gy + oy * gx + ox * oy * gn).as("_sxy"))
     val n = col("_n").cast(dec)
     val num = (n * col("_sxy") - col("_sx") * col("_sy")).cast("double")
     val va = (n * col("_sxx") - col("_sx") * col("_sx")).cast("double")
     val vb = (n * col("_syy") - col("_sy") * col("_sy")).cast("double")
-    allPairs.join(g, Seq("_cx", "_cy"), "left")
-      .select(col("_cx").as("col_x"), col("_cy").as("col_y"),
-        coalesce(col("_n"), lit(0L)).as("n"),
-        when(coalesce(col("_n"), lit(0L)) === 0L || va * vb === 0.0,
-          lit(null).cast("double"))
-          .otherwise(round(num / sqrt(va * vb), 6)).as("rho"))
+    g.select(
+      element_at(typedLit(xs.map(cols)), col("_p") + 1).as("col_x"),
+      element_at(typedLit(ys.map(cols)), col("_p") + 1).as("col_y"),
+      col("_n").as("n"),
+      when(col("_n") === 0L || va * vb === 0.0, lit(null).cast("double"))
+        .otherwise(round(num / sqrt(va * vb), 6)).as("rho"))
   }
 
   /** Kendall τ-b matrix — the association family's ORDINAL member,

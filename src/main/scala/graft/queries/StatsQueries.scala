@@ -297,10 +297,11 @@ object StatsQueries extends QueryFamily {
       round(col("l_tax") * 100).cast("long").as("tax"))
     ops.Stats.spearmanPairwise(fp, Seq("q", "ep", "disc", "tax"))
   }
-  // r19 shape: ranks checkpointed at build; final segment = the two
-  // corpus-side SHUFFLE_HASH probe re-keys + two rank-side build
-  // re-keys + the per-pair moment agg + the pair-list attach; measured 6
-  query("spearman_pairwise", spearmanPairwiseQ, Shuffles(6)) {
+  // cell table checkpointed at build; final segment = the x-window
+  // exchange by (pair, x-bucket), the y-window exchange by (pair,
+  // y-bucket) and the grid rows by pair; measured 3 (2 when the cell table
+  // fits one bucket and both windows share the exchange by pair)
+  query("spearman_pairwise", spearmanPairwiseQ, Shuffles(3)) {
     // pairwise-complete Spearman replay: per pair, ranks computed over
     // exactly the both-non-null rows (the same doubled-average-rank
     // identity), then the identical per-pair moment chain — the planted

@@ -22,10 +22,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * only once nothing will read it again: a locally-checkpointed RDD cannot
   * be recomputed, so any later action over it would fail.
   *
-  * Iterative operators never call this themselves: they run through
+  * Iterative operators leave their generations to
   * [[graft.ops.Fixpoint.iterate]], which owns releasing every generation,
   * including a checkpointed init the loop owns (and reads [[materialized]]
-  * to time it).
+  * to time it). They call this only for the loop-invariant tables their
+  * rounds read (PageRank's edge and node tables, label propagation's edge
+  * list), once the loop has returned its materialized last generation.
   */
 object CheckpointUtil {
   def unpersist(ds: Dataset[_], blocking: Boolean = false): Unit =

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +10,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** `body`'s result and the number of jobs it submitted, counted between
+    * two drains of the listener bus. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftListenerBus.waitUntilEmpty(sc, 30000)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      GraftListenerBus.waitUntilEmpty(sc, 30000)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {

@@ -1,8 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointUtil
@@ -10,22 +8,6 @@ import org.apache.spark.sql.graft.CheckpointUtil
 class FixpointSpec extends SparkTestBase {
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** `body`'s result and the number of jobs it submitted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftListenerBus.waitUntilEmpty(sc, 30000)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      GraftListenerBus.waitUntilEmpty(sc, 30000)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("iterate: a superseded generation goes once a newer one has materialized") {
     // init is either a projection iterate must leave alone, or (ownsInit)
@@ -101,18 +83,16 @@ class FixpointSpec extends SparkTestBase {
         val (out, _, release) = Dedup.connectedComponentsLSRounds(ids, chain)
         (out, Some(release))
       }, 1, Some(45)),
-      // the edge list with out-degrees, the node table and the final rank
-      ("pageRank", () => (Graph.pageRank(graph, "src", "dst"), None), 3, None),
-      // the undirected edge list and the final labels
-      ("labelPropagation", () => (Graph.labelPropagation(graph, "src", "dst"), None), 2, None),
+      // the final rank (the edge and node tables go once the loop returns)
+      ("pageRank", () => (Graph.pageRank(graph, "src", "dst"), None), 1, None),
+      // the final labels (the edge list goes once the loop returns)
+      ("labelPropagation", () => (Graph.labelPropagation(graph, "src", "dst"), None), 1, None),
       // the final surviving edges
       ("kCore", () => (Graph.kCore(graph, "src", "dst", k = 2), None), 1, Some(20)))
     for ((name, run, retained, pinnedJobs) <- rows) {
       val before = persisted
       // the persisted RDDs themselves, held from the moment the call
-      // returns: a checkpoint the result does not read (PageRank's edge and
-      // node tables, label propagation's edge list) is otherwise freed
-      // whenever a GC lets the ContextCleaner reach it
+      // returns, so a driver GC cannot free a checkpoint before it is counted
       val ((out, release, left), jobs) = jobsOf {
         val (out, release) = run()
         (out, release, spark.sparkContext.getPersistentRDDs -- before)

@@ -2337,15 +2337,32 @@ class PipelineOpsSpec extends SparkTestBase {
     import spark.implicits._
     val df = (1L to 500L).map(i => (i, (i * 7) % 101, (i * 13) % 37))
       .toDF("id", "x", "y")
-    // the scale gate: every Window that orders by the melted value (_v)
-    // must ALSO partition by the range bucket (_rb) — a window partitioned
-    // by the column alone would run each column's whole distinct-value
-    // table through one task's sort (the 100-TB single-thread hazard this
-    // derivation exists to remove). Since r19 the rank table is eagerly
-    // checkpointed at build time (both Spearman callers), so the final
-    // query segment no longer CONTAINS the rank windows — the gate
-    // inspects the shared doubledRanks derivation plan directly, which is
-    // exactly the plan the checkpoint materializes.
+    // the scale gate: every Window that orders by a value must ALSO
+    // partition by that value's range bucket — a window partitioned by the
+    // column (or the pair) alone would run a whole column's values through
+    // one task's sort (the 100-TB single-thread hazard the buckets exist to
+    // remove). Each window's (partition names, order names) in a plan:
+    def rankWindows(q: org.apache.spark.sql.DataFrame): Seq[(Seq[String], Seq[String])] =
+      q.queryExecution.sparkPlan.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec =>
+          (w.partitionSpec.flatMap(_.references.map(_.name)),
+            w.orderSpec.flatMap(_.references.map(_.name)))
+      }
+    // pairwise ranks are windows of the final query, over the checkpointed
+    // cells; several buckets are forced, since a cell table this small
+    // ranks in one bucket (whose bucket key the optimizer folds away)
+    val pw = rankWindows(Stats.spearmanPairwise(df, Seq("x", "y"), _ => 8))
+    for ((v, rb) <- Seq("_vx" -> "_rbx", "_vy" -> "_rby")) {
+      val byValue = pw.filter(_._2.contains(v))
+      assert(byValue.nonEmpty, s"expected a rank window ordering by $v")
+      byValue.foreach { case (part, _) =>
+        assert(part.contains(rb), s"$v window must partition by $rb too: $part")
+      }
+    }
+    // the listwise rank table is eagerly checkpointed at build time, so
+    // its final query no longer CONTAINS the rank windows — the gate
+    // inspects the doubledRanks derivation plan directly, which is exactly
+    // the plan the checkpoint materializes.
     val melted = df.select(org.apache.spark.sql.functions.explode(
       org.apache.spark.sql.functions.array(
         org.apache.spark.sql.functions.struct(
@@ -2356,13 +2373,10 @@ class PipelineOpsSpec extends SparkTestBase {
           org.apache.spark.sql.functions.col("y").as("v")))).as("_e"))
       .select(org.apache.spark.sql.functions.col("_e.c").as("_c"),
         org.apache.spark.sql.functions.col("_e.v").as("_v"))
-    val plan = Stats.doubledRanks(melted).queryExecution.executedPlan.toString
-    val windowLines = plan.linesIterator.filter(l =>
-      l.contains("Window") && l.contains("_v#")).toSeq
-    assert(windowLines.nonEmpty, "expected rank windows in the plan")
-    windowLines.foreach { l =>
-      assert(l.contains("_rb#"),
-        s"rank window must partition by the range bucket too:\n$l")
+    val lw = rankWindows(Stats.doubledRanks(melted)).filter(_._2.contains("_v"))
+    assert(lw.nonEmpty, "expected rank windows in the plan")
+    lw.foreach { case (part, _) =>
+      assert(part.contains("_rb"), s"rank window must partition by the range bucket too: $part")
     }
     // and the results survive the bucketing: many distinct values spread
     // over >1 bucket must give the same rho as DuckDB-style hand ranks —
@@ -2437,6 +2451,79 @@ class PipelineOpsSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     assert(b === a)
+  }
+
+  /** Driver-side pairwise Spearman: doubled average ranks over each pair's
+    * complete rows, exact integer moments, the closed form rounded to 6. */
+  private def handSpearman(rows: Seq[Seq[Option[Long]]], cols: Seq[String])
+      : Map[(String, String), (Long, Any)] =
+    (for { i <- cols.indices; j <- (i + 1) until cols.size } yield {
+      val xy = rows.flatMap(r => for (x <- r(i); y <- r(j)) yield (x, y))
+      def doubled(v: Seq[Long]): Seq[BigInt] = {
+        var below = 0L
+        val rank = v.groupBy(identity).toSeq.sortBy(_._1).map { case (k, ks) =>
+          val r = 2 * below + ks.size + 1
+          below += ks.size
+          k -> BigInt(r)
+        }.toMap
+        v.map(rank)
+      }
+      val (dx, dy) = (doubled(xy.map(_._1)), doubled(xy.map(_._2)))
+      val n = BigInt(xy.size)
+      val (sx, sy) = (dx.sum, dy.sum)
+      val num = (n * dx.zip(dy).map { case (a, b) => a * b }.sum - sx * sy).toDouble
+      val va = (n * dx.map(a => a * a).sum - sx * sx).toDouble
+      val vb = (n * dy.map(b => b * b).sum - sy * sy).toDouble
+      val rho = if (n == 0 || va * vb == 0.0) null
+        else BigDecimal(num / math.sqrt(va * vb))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      (cols(i), cols(j)) -> ((xy.size.toLong, rho))
+    }).toMap
+
+  private def pairwiseMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getString(1)) ->
+      ((r.getLong(2), if (r.isNullAt(3)) null else r.getDouble(3)))).toMap
+
+  test("spearmanPairwise: any bucket count gives the one-bucket result and the hand ranking (ties, NULLs, a hot value, a zero-row pair)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261019L)
+    def maybe(pNull: Double)(v: => Long): Option[Long] =
+      if (rnd.nextDouble() < pNull) None else Some(v)
+    // a: 50 values, heavy ties; b: one hot value on ~40% of its rows;
+    // c: near-continuous; d and e never both present (a zero-row pair)
+    val rows = (1 to 3000).map { i =>
+      Seq(
+        maybe(0.1)(rnd.nextInt(50).toLong),
+        maybe(0.2)(if (rnd.nextDouble() < 0.4) 7L else rnd.nextInt(100000).toLong),
+        maybe(0.0)(rnd.nextLong() % 1000000L),
+        if (i % 2 == 0) Some(rnd.nextInt(300).toLong) else None,
+        if (i % 2 == 1) maybe(0.3)(rnd.nextInt(20).toLong) else None)
+    }
+    val cols = Seq("a", "b", "c", "d", "e")
+    val df = rows.map(r => (r(0), r(1), r(2), r(3), r(4))).toDF(cols: _*)
+    val hand = handSpearman(rows, cols)
+    assert(hand(("d", "e")) === ((0L, null)))
+    val one = pairwiseMap(Stats.spearmanPairwise(df, cols, _ => 1))
+    assert(one === hand)
+    for (b <- Seq(2, 8, 256))
+      assert(pairwiseMap(Stats.spearmanPairwise(df, cols, _ => b)) === one, s"$b buckets")
+    assert(pairwiseMap(Stats.spearmanPairwise(df, cols)) === one, "the default rule")
+    intercept[IllegalArgumentException](Stats.spearmanPairwise(df, cols, _ => 3))
+  }
+
+  test("spearmanPairwise: one call submits 5 jobs in one bucket, 6 in several") {
+    import spark.implicits._
+    val df = (1L to 200L).map(i => (i % 7, (i * 13) % 101, Option(i).filter(_ % 5 != 0)))
+      .toDF("x", "y", "z")
+    // the cell table's checkpoint (its exchange and its own job, which also
+    // observes the cell count and the boundary sketch), then the query's
+    // exchanges and its result: in one bucket the x and y windows share the
+    // cells' exchange by pair, in several each side has its own
+    for ((b, want) <- Seq(1 -> 5, 8 -> 6)) {
+      val (out, jobs) = jobsOf(Stats.spearmanPairwise(df, Seq("x", "y", "z"), _ => b).collect())
+      assert(out.length === 3)
+      assert(jobs === want, s"$b buckets")
+    }
   }
 
   test("kendallTau: hand pair counts and tie corrections exact; pair identity holds; pairwise NULLs; constant NULL; invariant") {
