@@ -64,7 +64,7 @@ object Bench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     selected.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     }
     // machine-load telemetry per query: BASELINE.md adjudication has twice
     // hinged on a "busy machine window" narrative that a judge could only
@@ -129,9 +129,10 @@ object Bench {
           s"(${e.getClass.getSimpleName}) — stage metrics may be incomplete") }
       stageMetrics(name) = (acc.get(0) - before(0), acc.get(1) - before(1),
         acc.get(2) - before(2), acc.get(3) - before(3))
-      // drop any (local-)checkpointed / cached blocks a query left behind so
-      // accumulated storage never skews later queries' timings
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // drop any (local-)checkpointed / cached blocks a query left behind,
+      // waiting until they are freed, so neither accumulated storage nor a
+      // release still in flight skews the next query's timing
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     }
     val qs = timings.map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")

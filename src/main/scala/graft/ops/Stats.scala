@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
 
@@ -355,11 +355,11 @@ object Stats {
       case _ => false
     })) "long" else "decimal(38,0)"
 
-  /** Range buckets per column for the two-phase rank derivation: 255
-    * boundaries → 256 buckets of roughly equal DISTINCT-value count.
-    * More buckets would shrink the per-task sort further, but 256 already
-    * turns a 10¹¹-distinct-value column into ~4·10⁸-value sorts, and the
-    * offsets table stays trivially broadcastable (256·k rows).
+  /** Range buckets of the rank windows: at most 256, whose 255 boundaries
+    * one sketch of quantile levels i/256 carries for every bucket count
+    * dividing 256. 256 already turns a 10¹¹-distinct-value column into
+    * ~4·10⁸-value sorts, and the offsets table stays trivially
+    * broadcastable (256 rows per group).
     */
   private val rankRangeBuckets = 256
 
@@ -367,6 +367,16 @@ object Stats {
     * range-bucket boundaries. */
   private def rankBucketPcts: Column =
     array((1 until rankRangeBuckets).map(i => lit(i.toDouble / rankRangeBuckets)): _*)
+
+  /** Rows per range bucket of the rank windows. */
+  private val rankRowsPerBucket = 1L << 14
+
+  /** Range buckets for an observed row count: the smallest power of two
+    * leaving at most [[rankRowsPerBucket]] rows a bucket, capped at
+    * [[rankRangeBuckets]]. */
+  private def rankBuckets(rows: Long): Int =
+    Iterator.iterate(1)(_ * 2)
+      .find(b => b == rankRangeBuckets || b * rankRowsPerBucket >= rows).get
 
   /** Range bucket of `v` = #{boundaries strictly below `v`} among the first
     * `n` entries of the sorted array `bounds` — a BINARY-SEARCH when-tree
@@ -390,80 +400,142 @@ object Stats {
     go(1, n)
   }
 
-  /** Doubled-average-rank table for a melted `(_c, _v)` stream: one row
-    * per distinct (column, value) carrying `_dr = 2·(#strictly-below) +
-    * #ties + 1` — the average rank doubled so ties stay integral.
-    *
-    * The prefix sum ("rows strictly below this value") is RANGE-BUCKETED
-    * in two phases — the [[graft.ops.Sampling.shuffleShards]] position
-    * machinery re-expressed for value order: a naive
-    * `Window.partitionBy(_c).orderBy(_v)` runs each column's WHOLE
-    * distinct-value table through one task's sort, which on a genuinely
-    * continuous 100-TB column (distinct ≈ row count) single-threads a
-    * ~10¹¹-value sort. Instead each column's values get ~equal-DISTINCT
-    * order-preserving range buckets from sampled quantile boundaries of
-    * the distinct-value table (the boundary pass aggregates the
-    * counts-table exchange, which Catalyst reuses — no extra corpus
-    * pass); phase 1 turns per-(col, bucket) count totals into cumulative
-    * bucket offsets via a window over the ≤256·k-row totals table, and
-    * phase 2 prefix-sums WITHIN each (col, bucket) only. Identical `_dr`
-    * to the single-sort formulation — bucket boundaries partition value
-    * order, so below-count = bucket offset + within-bucket prefix — but
-    * the largest per-task sort is ~distinct/256 per column and the
-    * parallelism is col·256 groups instead of col tasks. Boundary
-    * QUALITY only shapes balance, never results (any order-preserving
-    * bucketing gives the same ranks), so the approximate sketch is safe
-    * by construction.
+  /** `base` eagerly checkpointed by one job that also observes its row
+    * count, one boundary sketch per `values` column and the `extra`
+    * aggregates; the bucket count `buckets` gives for that row count (a
+    * divisor of [[rankRangeBuckets]]); each sketch's B − 1 boundaries; and
+    * the `extra` values, in order.
     */
-  private[ops] def doubledRanks(melted: DataFrame): DataFrame = {
+  private def sketchedCheckpoint(
+      base: DataFrame,
+      values: Seq[Column],
+      extra: Seq[Column],
+      buckets: Long => Int): (DataFrame, Int, Seq[Seq[Double]], Row) = {
+    // accuracy 2,560 = each boundary within ~1/10 of a bucket of its target
+    // rank, and a sketch of a few tens of KB: every task of the checkpointed
+    // plan ships one per value column to the driver
+    val (ckpt, seen) = Fixpoint.observedCheckpoint(base, count(lit(1)) +:
+      values.map(percentile_approx(_, rankBucketPcts, lit(10 * rankRangeBuckets))) ++:
+      extra)
+    val nb = buckets(seen.getLong(0))
+    require(nb >= 1 && rankRangeBuckets % nb == 0,
+      s"bucket count $nb must divide $rankRangeBuckets")
+    // every (256/nb)-th sketch value; a column without values has no sketch
+    // and no row to bucket, so any sorted stand-in serves
+    val bounds = values.indices.map { c =>
+      val sketch = Option(seen.getSeq[Double](c + 1))
+        .getOrElse(Seq.fill(rankRangeBuckets - 1)(0.0))
+      (1 until nb).map(b => sketch(b * (rankRangeBuckets / nb) - 1))
+    }
+    (ckpt, nb, bounds, Row.fromSeq(seen.toSeq.drop(1 + values.size)))
+  }
+
+  /** `t` with `rb`, the range bucket of its column `v` under the sorted
+    * boundary array `bounds` of `nb` − 1 entries, in a projection of its
+    * own: two 255-node lookup trees in one projection overflow the 64 KB
+    * codegen limit. At one bucket `rb` is the constant 0 and no lookup is
+    * built.
+    */
+  private def withRangeBucket(
+      t: DataFrame, v: String, bounds: Column, nb: Int, rb: String): DataFrame =
+    if (nb == 1) t.withColumn(rb, lit(0))
+    else t
+      .withColumn("_bnd", bounds)
+      .withColumn("_vd", col(v).cast("double"))
+      .withColumn(rb, rangeBucket(col("_vd"), col("_bnd"), nb - 1))
+      .drop("_bnd", "_vd")
+
+  /** The cumulative below a value, the one derivation under the rank
+    * statistics: [[doubledRanks]], [[rankAuc]], [[prCurve]] and
+    * [[pooledCumulativeGrid]] (which feeds [[ksTest]], [[emdDrift]] and
+    * [[rankSumTest]]). `base` holds one row per distinct (group, `value`);
+    * each row gains, per long weight column `w`, `w_below`: the exact Σ w
+    * over its group's rows with a strictly smaller `value`. The group is
+    * the `key` column, or the whole table without one.
+    *
+    * `base` is checkpointed eagerly (executor storage then holds one row
+    * per distinct (group, value)), and that one job also reads its row
+    * count, the `observe` aggregates and `value`'s boundary sketch: one
+    * per known `tags` value of the key, or one pooled over all groups (no
+    * key, or a data-dependent key over a shared value axis). The row count
+    * sets the bucket count B by the `buckets` rule ([[rankBuckets]]: a
+    * power of two, one bucket per 2¹⁴ rows, at most 256), and
+    * [[rangeBucket]] maps each value to one of B order-preserving ranges at
+    * the sketch's boundaries. Equal values share a bucket, so a row's
+    * below is its group's weight in lower buckets (an offset, from the ≤ B
+    * bucket totals per group) plus the weight below it in its own bucket
+    * (a window partitioned by (group, bucket), ordered by the exact
+    * value): the same exact sums under any boundaries, so the approximate
+    * sketch shapes balance, never results. NaN sorts above every double,
+    * as Spark orders it, and lands in the last bucket.
+    *
+    * Bound: the largest sort is one (group, bucket) window partition, ~1/B
+    * of its group's rows but never fewer than one value's rows, which
+    * cannot split across buckets; the offsets window sorts at most B rows
+    * per group. At B = 1 neither lookup nor offsets is built, and the whole
+    * table, so any window partition, holds at most 2¹⁴ rows: at most 2¹⁴
+    * rows sort in one task.
+    *
+    * Returns the result, the `observe` values, and, unless B = 1, the
+    * bucketing as a transform adding `_rb` from a `value` column, for a
+    * caller banding the same value axis.
+    */
+  private def cumulativeBelow(
+      base: DataFrame,
+      key: Option[String],
+      tags: Seq[String],
+      value: String,
+      weights: Seq[String],
+      observe: Seq[Column] = Nil,
+      buckets: Long => Int = rankBuckets)
+      : (DataFrame, Row, Option[DataFrame => DataFrame]) = {
     import org.apache.spark.sql.expressions.Window
-    // EAGER checkpoint (r19): the counts table is referenced by the
-    // boundary sketch, the bucketing join, the offsets aggregation and
-    // the in-bucket window — four static embeddings whose shared corpus
-    // exchange AQE reuse collapsed only UNRELIABLY in practice (measured
-    // in-suite: spearman_pairwise swung 30 s → 258 s between two
-    // consecutive full runs when reuse lapsed). The distinct-value table
-    // is dimension-sized by construction — distinct values per column —
-    // so materializing it once is cheap and makes the corpus pass run
-    // exactly once, deterministically. BOUND (r19 advisory, stated): for a
-    // genuinely continuous column distinct ≈ row count, so this pins a
-    // table of up to one row PER DISTINCT VALUE per column in
-    // executor-local storage — the deliberate trade against re-running the
-    // corpus melt 4×; the table is narrow (column tag, value, count), and
-    // the same bound already governs the rank join-backs downstream.
+    val vd = col(value).cast("double")
+    val sketched = when(!isnan(vd), vd)
+    val (ckpt, nb, bounds, observed) = sketchedCheckpoint(base,
+      if (tags.isEmpty) Seq(sketched)
+      else tags.map(t => when(col(key.get) === t, sketched)),
+      observe, buckets)
+    def bucketed(t: DataFrame): DataFrame = withRangeBucket(t, value,
+      if (tags.isEmpty) typedLit(bounds.head)
+      else element_at(typedLit(tags.zip(bounds).toMap), col(key.get)), nb, "_rb")
+    val part = (key.toSeq :+ "_rb").map(col)
+    val inBucket = Window.partitionBy(part: _*).orderBy(col(value))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val within = weights.foldLeft(bucketed(ckpt))((t, w) =>
+      t.withColumn(s"${w}_below", coalesce(sum(col(w)).over(inBucket), lit(0L))))
+    if (nb == 1) (within, observed, None)
+    else {
+      val lower = Window.partitionBy(key.toSeq.map(col): _*).orderBy(col("_rb"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val totals = weights.map(w => sum(col(w)).as(w))
+      val offsets = bucketed(ckpt).groupBy(part: _*).agg(totals.head, totals.tail: _*)
+        .select(part ++ weights.map(w =>
+          coalesce(sum(col(w)).over(lower), lit(0L)).as(s"_off$w")): _*)
+      val out = weights.foldLeft(within.join(broadcast(offsets), key.toSeq :+ "_rb"))(
+        (t, w) => t.withColumn(s"${w}_below", col(s"${w}_below") + col(s"_off$w"))
+          .drop(s"_off$w"))
+      (out, observed, Some(bucketed _))
+    }
+  }
+
+  /** Doubled-average-rank table for a melted `(_c, _v)` stream over the
+    * columns `cols`: one row per distinct (column, value) carrying
+    * `_dr = 2·(#strictly-below) + #ties + 1` — the average rank doubled so
+    * ties stay integral. The count below is [[cumulativeBelow]] over the
+    * per-(column, value) counts, each column with its own value sketch
+    * (its bound: one range bucket of one column's distinct values per
+    * sort); `buckets` is its bucket rule.
+    */
+  private[ops] def doubledRanks(
+      melted: DataFrame,
+      cols: Seq[String],
+      buckets: Long => Int = rankBuckets): DataFrame = {
     val counts = melted.groupBy(col("_c"), col("_v")).agg(count(lit(1)).as("_cnt"))
-      // bucket on the DOUBLE image of the value: monotone (adjacent
-      // decimals collapsing to one double just share a bucket), and it
-      // keeps the quantile sketch in its native domain
-      .withColumn("_vd", col("_v").cast("double"))
-      .localCheckpoint()
-    val bounds = counts.groupBy(col("_c"))
-      .agg(percentile_approx(col("_vd"), rankBucketPcts, lit(10000)).as("_bnds"))
-    // NOT checkpointed (r19): offsets and the in-bucket window both read
-    // the bucketed table, but it derives deterministically from the
-    // checkpointed counts + the boundary aggregate, and with the
-    // binary-search bucket lookup the recompute is two cheap passes over a
-    // dimension-sized table — cheaper than a third sequential
-    // materialization barrier (the eager-checkpoint chain was serializing
-    // the whole derivation: counts + bucketed + ranks = three back-to-back
-    // jobs before the query proper even started).
-    val bucketed = counts.join(broadcast(bounds), Seq("_c"))
-      .withColumn("_rb", rangeBucket(col("_vd"), col("_bnds"), rankRangeBuckets - 1))
-      .drop("_bnds", "_vd")
-    val offsets = bucketed.groupBy(col("_c"), col("_rb"))
-      .agg(sum(col("_cnt")).as("_bt"))
-      .withColumn("_boff", coalesce(
-        sum(col("_bt")).over(Window.partitionBy(col("_c")).orderBy(col("_rb"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_c"), col("_rb"), col("_boff"))
-    val wIn = Window.partitionBy(col("_c"), col("_rb")).orderBy(col("_v"))
-    bucketed
-      .withColumn("_belowIn",
-        coalesce(sum(col("_cnt")).over(wIn) - col("_cnt"), lit(0L)))
-      .join(broadcast(offsets), Seq("_c", "_rb"))
-      .select(col("_c"), col("_v"),
-        (lit(2L) * (col("_boff") + col("_belowIn")) + col("_cnt") + 1L)
-          .as("_dr"))
+    val (ranked, _, _) =
+      cumulativeBelow(counts, Some("_c"), cols, "_v", Seq("_cnt"), buckets = buckets)
+    ranked.select(col("_c"), col("_v"),
+      (lit(2L) * col("_cnt_below") + col("_cnt") + 1L).as("_dr"))
   }
 
   /** Spearman rank-correlation matrix — [[correlations]]' MONOTONE twin,
@@ -474,12 +546,10 @@ object Stats {
     * ("is there any monotone relationship at all") a feature-profiling
     * pass wants first. Ranks are AVERAGE ranks DOUBLED so they stay
     * integers under ties (`2·avg = 2·(#strictly-below) + #ties + 1`),
-    * derived per column from a value-count table with a TWO-PHASE
-    * range-bucketed prefix sum ([[doubledRanks]]) — the rank of a VALUE,
-    * joined back to the rows, so no stage ever sorts more than
-    * ~distinct/256 values of one column in one task (and no global sort
-    * ever happens). The moment pass and the closed-form IEEE step are
-    * then EXACTLY [[correlations]] over the doubled ranks (DECIMAL(38,0)
+    * derived per column from a value-count table ([[doubledRanks]], whose
+    * count below is [[cumulativeBelow]] and bounded by its contract) —
+    * the rank of a VALUE, joined back to the rows. The moment pass and the
+    * closed-form IEEE step are then EXACTLY [[correlations]] over the doubled ranks (DECIMAL(38,0)
     * sums, one correctly-rounded divide, round 6, zero-variance → NULL).
     *
     * Input columns must be integral fixed-point ([[requireIntegralCols]]
@@ -497,12 +567,10 @@ object Stats {
     * sibling for sparse feature tables.
     *
     * Shape at 100 TB: melt in-row → per-(col, value) count agg → the
-    * value-rank table (distinct-value-sized) derives bucketed prefix
-    * sums, materializes once, and attaches back by k SHUFFLE_HASH joins
-    * on narrow value keys (build side = the per-column slice of the rank
+    * value-rank table (distinct-value-sized) derives its cumulative,
+    * materializes once, and attaches back by k SHUFFLE_HASH joins on
+    * narrow value keys (build side = the per-column slice of the rank
     * table, dimension-sized at any scale) → the single moment gather.
-    * The largest single-task sort anywhere is one range bucket of one
-    * column's distinct values.
     */
   def spearmanCorrelations(
       df: DataFrame,
@@ -536,7 +604,7 @@ object Stats {
     // branches never fired in practice) and each join's build side is the
     // dimension-sized per-column slice — SHUFFLE_HASH for the same
     // scale-stability reason spearmanPairwise states.
-    val ranks = doubledRanks(melted).localCheckpoint()
+    val ranks = doubledRanks(melted, cols).localCheckpoint()
     val ranked = cols.foldLeft(complete) { (acc, c) =>
       acc.join(
         ranks.filter(col("_c") === c)
@@ -598,16 +666,6 @@ object Stats {
   def spearmanPairwise(df: DataFrame, cols: Seq[String]): DataFrame =
     spearmanPairwise(df, cols, rankBuckets)
 
-  /** Cells per range bucket of [[spearmanPairwise]]'s rank windows. */
-  private val rankCellsPerBucket = 1L << 14
-
-  /** Range buckets for an observed cell count: the smallest power of two
-    * leaving at most [[rankCellsPerBucket]] cells a bucket, capped at
-    * [[rankRangeBuckets]]. */
-  private def rankBuckets(cells: Long): Int =
-    Iterator.iterate(1)(_ * 2)
-      .find(b => b == rankRangeBuckets || b * rankCellsPerBucket >= cells).get
-
   /** [[spearmanPairwise]] with the rule mapping the observed cell count to
     * the bucket count (a divisor of [[rankRangeBuckets]]) given. */
   private[ops] def spearmanPairwise(
@@ -641,31 +699,10 @@ object Stats {
       when(col("_p").isin(xs.indices.filter(xs(_) == c): _*), col("_vx"))
         .when(col("_p").isin(ys.indices.filter(ys(_) == c): _*), col("_vy"))
         .cast("double")
-    // accuracy 2,560 = each boundary within ~1/10 of a bucket of its target
-    // rank, and a sketch of a few tens of KB: every task of the cell
-    // aggregation ships one per column to the driver
-    val (ckpt, seen) = Fixpoint.observedCheckpoint(cells, count(lit(1)) +:
-      cols.indices.map(c =>
-        percentile_approx(valuesOf(c), rankBucketPcts, lit(10 * rankRangeBuckets))))
-    val nb = buckets(seen.getLong(0))
-    require(nb >= 1 && rankRangeBuckets % nb == 0,
-      s"bucket count $nb must divide $rankRangeBuckets")
-    // every (256/nb)-th sketch value; a column without cells has no sketch
-    // and no cell to bucket, so any sorted stand-in serves
-    val bounds = cols.indices.map { c =>
-      val sketch = Option(seen.getSeq[Double](c + 1))
-        .getOrElse(Seq.fill(rankRangeBuckets - 1)(0.0))
-      (1 until nb).map(b => sketch(b * (rankRangeBuckets / nb) - 1))
-    }
-    // a side's bucket, in a projection of its own: two sides' 255-node
-    // lookup trees in one projection overflow the 64 KB codegen limit
+    val (ckpt, nb, bounds, _) =
+      sketchedCheckpoint(cells, cols.indices.map(valuesOf), Nil, buckets)
     def withBucket(t: DataFrame, side: Seq[Int], v: String, rb: String): DataFrame =
-      if (nb == 1) t.withColumn(rb, lit(0))
-      else t
-        .withColumn("_bnd", element_at(typedLit(side.map(bounds)), col("_p") + 1))
-        .withColumn("_vd", col(v).cast("double"))
-        .withColumn(rb, rangeBucket(col("_vd"), col("_bnd"), nb - 1))
-        .drop("_bnd", "_vd")
+      withRangeBucket(t, v, element_at(typedLit(side.map(bounds)), col("_p") + 1), nb, rb)
     // doubled rank within the bucket: 2·(rows ≤ v) − (rows = v) + 1
     def withRank(t: DataFrame, v: String, rb: String, r: String): DataFrame = {
       val w = Window.partitionBy(col("_p"), col(rb)).orderBy(col(v))
@@ -1564,6 +1601,60 @@ object Stats {
         (col("n_tokens").cast("double") / col("n_docs")).as("avg_doc_tokens"))
   }
 
+  /** Exact rank AUC (Mann–Whitney U) of an integer score against a boolean
+    * label — "does this quality/importance score actually separate the
+    * positives?", the evaluation metric for every filter and selection
+    * scorer in this engine, computed ENTIRELY in the integer lane:
+    * with tied scores taking their average rank, twice a score group's
+    * average rank is the integer `2·cum_below + cnt + 1`, so
+    *
+    *   auc_q = (Σ_pos 2·avgrank − 2·P·(P+1)/2) · 2^20 div (2·P·N)
+    *         = (Σ_pos (2·cum_below + cnt + 1) − P·(P+1)) · 2^20 div (2·P·N)
+    *
+    * — every term an exact int64/decimal, ONE integral division, so the
+    * value replays bit-identically in any engine (a float rank-sum would
+    * drift in shuffle order). Returns one row
+    * `(n_pos, n_neg, auc_q)` with `auc_q` in 2^20 fixed point
+    * (524288 = 0.5 = no separation); NULL when either class is empty
+    * (AUC of a one-class sample is undefined, not 0.5). NULL scores and
+    * NULL labels drop — an unscored row has no rank.
+    *
+    * Shape at 100 TB: one aggregation on the score (map-side partials) to
+    * the distinct-score table, whose count below each score is
+    * [[cumulativeBelow]] (no key; its contract bounds every sort), then a
+    * 1-row rollup. The cumulative is exact, so auc_q is bit-identical to
+    * the single-window formulation. `scoreCol` must be numeric (it is cast
+    * to double only to pick a bucket; ranking compares the exact original
+    * values; NaN ranks above every double). Overflow: Σ_pos avgrank ≤
+    * P·(P+N) — DECIMAL(38,0) keeps it exact past 10^18 rows.
+    */
+  def rankAuc(
+      df: DataFrame,
+      scoreCol: String,
+      labelCol: String): DataFrame = {
+    val base = df
+      .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
+      .groupBy(col(scoreCol).as("_s"))
+      .agg(count(lit(1)).as("_cnt"),
+        sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L)).as("_pos"))
+    val (ranked, _, _) = cumulativeBelow(base, None, Nil, "_s", Seq("_cnt"))
+    ranked
+      .agg(
+        sum(col("_pos")).as("n_pos"),
+        sum(col("_cnt") - col("_pos")).as("n_neg"),
+        sum(col("_pos").cast("decimal(38,0)") *
+          (lit(2) * col("_cnt_below") + col("_cnt") + lit(1))).as("_r2"))
+      .select(
+        coalesce(col("n_pos"), lit(0L)).as("n_pos"),
+        coalesce(col("n_neg"), lit(0L)).as("n_neg"),
+        when(col("n_pos").isNull || col("n_pos") === 0 || col("n_neg") === 0,
+          lit(null).cast("long"))
+          .otherwise(expr(
+            """((_r2 - CAST(n_pos AS DECIMAL(38,0)) * (n_pos + 1)) * 1048576)
+              | div (CAST(2 AS DECIMAL(38,0)) * n_pos * n_neg)""".stripMargin)
+            .cast("long")).as("auc_q"))
+  }
+
   /** Join-key skew profile — the diagnostic that decides between a plain
     * shuffle join, AQE skew splitting, and [[Skew.saltedJoin]] BEFORE the
     * join runs: the `k` heaviest keys with exact counts, each key's corpus
@@ -1584,103 +1675,6 @@ object Stats {
     * single corpus pass, with the counts checkpointed so the two consumers
     * don't re-scan the corpus. Ties rank by key string ascending.
     */
-  /** Exact rank AUC (Mann–Whitney U) of an integer score against a boolean
-    * label — "does this quality/importance score actually separate the
-    * positives?", the evaluation metric for every filter and selection
-    * scorer in this engine, computed ENTIRELY in the integer lane:
-    * with tied scores taking their average rank, twice a score group's
-    * average rank is the integer `2·cum_below + cnt + 1`, so
-    *
-    *   auc_q = (Σ_pos 2·avgrank − 2·P·(P+1)/2) · 2^20 div (2·P·N)
-    *         = (Σ_pos (2·cum_below + cnt + 1) − P·(P+1)) · 2^20 div (2·P·N)
-    *
-    * — every term an exact int64/decimal, ONE integral division, so the
-    * value replays bit-identically in any engine (a float rank-sum would
-    * drift in shuffle order). Returns one row
-    * `(n_pos, n_neg, auc_q)` with `auc_q` in 2^20 fixed point
-    * (524288 = 0.5 = no separation); NULL when either class is empty
-    * (AUC of a one-class sample is undefined, not 0.5). NULL scores and
-    * NULL labels drop — an unscored row has no rank.
-    *
-    * Shape at 100 TB: one aggregation on the score (map-side partials) to
-    * a distinct-score table — checkpointed, since three consumers hang off
-    * it — then the cumulative rank sum via the TWO-PHASE bucketed
-    * discipline (the [[graft.ops.Selection.selectToBudget]] shape, made
-    * order-preserving): scores band into ≤256 value-range buckets
-    * (width_bucket over the table's own min/max — a monotone function of
-    * the score, so bucket order IS score order and equal scores share a
-    * bucket), per-bucket count sums make a ≤257-row offsets table whose
-    * prefix sum is the one legitimately-unpartitioned window, and the
-    * per-score running count is a window PARTITIONED by bucket. No plan
-    * node ever globally sorts the distinct-score table — a raw continuous
-    * score (corpus-cardinality distinct values) was previously a
-    * single-task sort; now its worst case is one hot VALUE-RANGE bucket
-    * (uniform banding, not equi-depth — pathological all-mass-in-one-band
-    * distributions degrade parallelism, never correctness). The bucketing
-    * does not touch the VALUES: cum_below per score group is exact, so
-    * auc_q is bit-identical to the single-window formulation. `scoreCol`
-    * must be numeric (it is cast to double only to pick a band; ranking
-    * compares the exact original values). Overflow: Σ_pos avgrank ≤
-    * P·(P+N) — DECIMAL(38,0) keeps it exact past 10^18 rows.
-    */
-  def rankAuc(
-      df: DataFrame,
-      scoreCol: String,
-      labelCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // one corpus pass; the lazy checkpoint stops the build-time range pull,
-    // the offsets agg, and the join probe from each re-running it
-    val base = df
-      .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .groupBy(col(scoreCol).as("_s"))
-      .agg(count(lit(1)).as("_cnt"),
-        sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L)).as("_pos"))
-      .localCheckpoint(false)
-    // the score range is a bounded 1-row driver pull at build time (the
-    // centroid-collect precedent) — embedding lo/hi as literals keeps the
-    // band id a pure projection instead of duplicating a scalar-attach
-    // subtree under both downstream consumers
-    val rngRow = base.agg(
-      min(col("_s").cast("double")), max(col("_s").cast("double"))).head
-    val (lo, hi) =
-      if (rngRow.isNullAt(0)) (0.0, 0.0)
-      else (rngRow.getDouble(0), rngRow.getDouble(1))
-    // monotone band id in [1, 255]; NaN (width_bucket -> NULL) sorts above
-    // every double in Spark's ordering, so the last band keeps monotonicity
-    val bucketed = base.withColumn("_bkt",
-      if (lo == hi) lit(1L)
-      else coalesce(
-        width_bucket(col("_s").cast("double"), lit(lo), lit(hi), lit(254)),
-        lit(255L)))
-    val offsets = bucketed
-      .groupBy(col("_bkt")).agg(sum(col("_cnt")).as("_bsum"))
-      .withColumn("_before",
-        coalesce(sum(col("_bsum")).over(
-          Window.orderBy(col("_bkt"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_bkt"), col("_before"))
-    val w = Window.partitionBy(col("_bkt")).orderBy(col("_s"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed
-      .join(broadcast(offsets), Seq("_bkt"))
-      .withColumn("_cum",
-        col("_before") + coalesce(sum(col("_cnt")).over(w), lit(0L)))
-      .agg(
-        sum(col("_pos")).as("n_pos"),
-        sum(col("_cnt") - col("_pos")).as("n_neg"),
-        sum(col("_pos").cast("decimal(38,0)") *
-          (lit(2) * col("_cum") + col("_cnt") + lit(1))).as("_r2"))
-      .select(
-        coalesce(col("n_pos"), lit(0L)).as("n_pos"),
-        coalesce(col("n_neg"), lit(0L)).as("n_neg"),
-        when(col("n_pos").isNull || col("n_pos") === 0 || col("n_neg") === 0,
-          lit(null).cast("long"))
-          .otherwise(expr(
-            """((_r2 - CAST(n_pos AS DECIMAL(38,0)) * (n_pos + 1)) * 1048576)
-              | div (CAST(2 AS DECIMAL(38,0)) * n_pos * n_neg)""".stripMargin)
-            .cast("long")).as("auc_q"))
-  }
-
   def keySkewProfile(
       df: DataFrame,
       keyCol: String,
@@ -1732,23 +1726,23 @@ object Stats {
     wide.select(explode(array(entries: _*)).as("_e")).select(col("_e.*"))
   }
 
-  /** Shared by [[ksTest]] and [[emdDrift]]: the pooled-distinct-value
-    * cumulative grid — one corpus pass to (group, value) counts, the dense
-    * V×G grid (a group with no mass at a pooled value still carries its
-    * last cumulative there), and the TWO-PHASE bucketed cumulative (the
-    * rankAuc discipline: ≤254 monotone value bands from a bounded 1-row
-    * range pull, per-(group,band) offsets, within-band windows — no
-    * corpus-cardinality single-task sort anywhere). Returns
-    * (cum `(_g,_v,_c,_f)` — the dense per-value count rides along for
-    * callers needing point mass, not just the cumulative ([[rankSumTest]]'s
-    * U and tie terms), totals `(_g,_n)`, vals `(_v)` — vals checkpointed:
-    * the callers' gap/grid stages re-read it).
+  /** Shared by [[ksTest]], [[emdDrift]] and [[rankSumTest]]: the
+    * pooled-distinct-value cumulative grid — one corpus pass to (group,
+    * value) counts, the dense V×G grid (a group with no mass at a pooled
+    * value still carries its last cumulative there), and each group's
+    * cumulative over it ([[cumulativeBelow]], keyed by the group over the
+    * pooled value axis; its contract bounds every sort). Returns cum
+    * `(_g,_v,_c,_f)` (the dense per-value count rides along for callers
+    * needing point mass, not just the cumulative: [[rankSumTest]]'s U and
+    * tie terms), totals `(_g,_n)`, vals `(_v)` (checkpointed: the callers'
+    * gap/grid stages re-read it), and the grid's bucketing of a `_v`
+    * column unless it has one bucket.
     */
   private def pooledCumulativeGrid(
       df: DataFrame,
       groupCol: String,
-      valueCol: String): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
+      valueCol: String)
+      : (DataFrame, DataFrame, DataFrame, Option[DataFrame => DataFrame]) = {
     // one corpus pass; checkpointed — totals, the value grid, and the
     // count join all hang off it
     val base = df
@@ -1763,32 +1757,13 @@ object Stats {
     val grid = vals.crossJoin(broadcast(totals.select(col("_g"))))
     val counts = grid.join(base, Seq("_g", "_v"), "left")
       .withColumn("_c", coalesce(col("_c"), lit(0L)))
-    val rngRow = vals.agg(min(col("_v")), max(col("_v"))).head
-    val (lo, hi) =
-      if (rngRow.isNullAt(0)) (0.0, 0.0)
-      else (rngRow.getDouble(0), rngRow.getDouble(1))
-    val bucketed = counts.withColumn("_bkt",
-      if (lo == hi) lit(1L)
-      else coalesce(width_bucket(col("_v"), lit(lo), lit(hi), lit(254)),
-        lit(255L)))
-    val offsets = bucketed
-      .groupBy(col("_g"), col("_bkt")).agg(sum(col("_c")).as("_bsum"))
-      .withColumn("_before",
-        coalesce(sum(col("_bsum")).over(
-          Window.partitionBy(col("_g")).orderBy(col("_bkt"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_g"), col("_bkt"), col("_before"))
-    val wCum = Window.partitionBy(col("_g"), col("_bkt")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val (below, _, buckets) = cumulativeBelow(counts, Some("_g"), Nil, "_v", Seq("_c"))
     // checkpointed: BOTH callers self-join the grid (the a/b pair sides),
-    // and without the boundary the whole grid build — including the
-    // by-design G-row broadcast cross onto vals — runs once per side
-    val cum = bucketed
-      .join(broadcast(offsets), Seq("_g", "_bkt"))
-      .withColumn("_f", col("_before") + sum(col("_c")).over(wCum))
-      .select(col("_g"), col("_v"), col("_c"), col("_f"))
+    // and without the boundary the cumulative runs once per side
+    val cum = below
+      .select(col("_g"), col("_v"), col("_c"), (col("_c_below") + col("_c")).as("_f"))
       .localCheckpoint(false)
-    (cum, totals, vals)
+    (cum, totals, vals, buckets)
   }
 
   /** The V·G²/2 pair grid of cross-scaled cumulative differences shared by
@@ -1821,18 +1796,14 @@ object Stats {
     * distributions diverge most — the actionable bit of a drift alarm).
     *
     * NULL groups/values drop. `valueCol` must be numeric and NaN-free
-    * (NaN has engine-specific sort position; the banding coalesces it
-    * into the top band but cross-engine ORDER BY differs).
+    * (NaN has engine-specific sort position: Spark orders it above every
+    * double, but cross-engine ORDER BY differs).
     *
     * Scale shape: one corpus pass builds the (group, value) count table
     * (map-side combine); everything after runs on distinct-value
-    * cardinality V × group count G. The per-group cumulative uses the
-    * TWO-PHASE bucketed discipline ([[rankAuc]]'s shape): values band
-    * into ≤254 monotone value-range buckets, per-(group,bucket) offsets
-    * make a G×257-row table whose within-group prefix sum is the only
-    * unpartitioned-per-group window, and the per-value running sum is
-    * partitioned by (group, bucket) — no corpus-cardinality single-task
-    * sort anywhere. The pair stage joins the cumulative grid to itself on
+    * cardinality V × group count G. The per-group cumulative is
+    * [[pooledCumulativeGrid]]'s ([[cumulativeBelow]] bounds its sorts).
+    * The pair stage joins the cumulative grid to itself on
     * the value key (V·G²/2 rows — G is a dimension, never the corpus) and
     * reduces to one row per pair; the G-row group list rides a broadcast
     * nested-loop onto the value grid (the text_langid_model k-row
@@ -1844,7 +1815,7 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val (cum, totals, _) = pooledCumulativeGrid(df, groupCol, valueCol)
+    val (cum, totals, _, _) = pooledCumulativeGrid(df, groupCol, valueCol)
     // pair stage: cross-scaled cumulative difference per pooled value;
     // checkpointed — the max pass and the argmin pass both read it
     val pv = pairDiffGrid(cum, totals).localCheckpoint(false)
@@ -1879,11 +1850,11 @@ object Stats {
     * value axis. NULL groups/values drop.
     *
     * Shape at 100 TB: the [[pooledCumulativeGrid]] machinery (one corpus
-    * pass, banded two-phase cumulative, no corpus-cardinality sort); the
-    * value-gap table derives from the SAME ≤254 banding (within-band lead
-    * windows + each band's closing gap from the ≤255-row per-band head
-    * table — never one global lead window); the pair stage is one
-    * aggregation over the V·G²/2 diff grid. Overflow bound: Σ |ΔF|·gap ≤
+    * pass, the [[cumulativeBelow]] cumulative); the value-gap table takes
+    * the SAME range buckets (within-bucket lead windows + each bucket's
+    * closing gap from the ≤ B-row per-bucket head table — never one global
+    * lead window); the pair stage is one aggregation over the V·G²/2 diff
+    * grid. Overflow bound: Σ |ΔF|·gap ≤
     * n_a·n_b·range_micro — at 10⁹ rows/group and a 10⁶-unit range that is
     * 10²⁴, inside 38 digits.
     */
@@ -1892,27 +1863,25 @@ object Stats {
       groupCol: String,
       valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (cum, totals, vals) = pooledCumulativeGrid(df, groupCol, valueCol)
-    // value gaps on the micro lattice, banded (the grid's own discipline):
-    // lead within each band, and each band's LAST value closes against the
-    // next band's head from a <=255-row broadcast table
-    val rngRow = vals.agg(min(col("_v")), max(col("_v"))).head
-    val (lo, hi) =
-      if (rngRow.isNullAt(0)) (0.0, 0.0)
-      else (rngRow.getDouble(0), rngRow.getDouble(1))
-    val banded = vals.withColumn("_bkt",
-      if (lo == hi) lit(1L)
-      else coalesce(width_bucket(col("_v"), lit(lo), lit(hi), lit(254)),
-        lit(255L)))
-    val heads = banded.groupBy(col("_bkt")).agg(min(col("_v")).as("_head"))
-      .withColumn("_nexthead",
-        lead(col("_head"), 1).over(Window.orderBy(col("_bkt"))))
-      .select(col("_bkt"), col("_nexthead"))
-    val wLead = Window.partitionBy(col("_bkt")).orderBy(col("_v"))
-    val gaps = banded
-      .withColumn("_nv", lead(col("_v"), 1).over(wLead))
-      .join(broadcast(heads), Seq("_bkt"))
-      .withColumn("_next", coalesce(col("_nv"), col("_nexthead")))
+    val (cum, totals, vals, buckets) = pooledCumulativeGrid(df, groupCol, valueCol)
+    // value gaps on the micro lattice, in the grid's own range buckets:
+    // lead within each bucket, and each bucket's LAST value closes against
+    // the next bucket's head from a ≤ B-row broadcast table; one bucket
+    // (≤ 2¹⁴ grid rows) is one lead window
+    val next = buckets.fold(
+      vals.withColumn("_next", lead(col("_v"), 1).over(Window.orderBy(col("_v"))))) { b =>
+      val banded = b(vals)
+      val heads = banded.groupBy(col("_rb")).agg(min(col("_v")).as("_head"))
+        .withColumn("_nexthead",
+          lead(col("_head"), 1).over(Window.orderBy(col("_rb"))))
+        .select(col("_rb"), col("_nexthead"))
+      val wLead = Window.partitionBy(col("_rb")).orderBy(col("_v"))
+      banded
+        .withColumn("_nv", lead(col("_v"), 1).over(wLead))
+        .join(broadcast(heads), Seq("_rb"))
+        .withColumn("_next", coalesce(col("_nv"), col("_nexthead")))
+    }
+    val gaps = next
       .select(col("_v"),
         when(col("_next").isNotNull,
           floor(col("_next") * 1000000L).cast("decimal(38,0)") -
@@ -1955,15 +1924,15 @@ object Stats {
     * ~2·10⁹ rows each.
     *
     * Shape at 100 TB: the [[pooledCumulativeGrid]] machinery — one corpus
-    * pass to (group, value) counts, the banded two-phase cumulative (no
-    * corpus-cardinality sort), then ONE aggregation over the V·G²/2 pair
+    * pass to (group, value) counts, the [[cumulativeBelow]] cumulative,
+    * then ONE aggregation over the V·G²/2 pair
     * grid to a G²/2-row panel; the totals attach by broadcast.
     */
   def rankSumTest(
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val (cum, totals, _) = pooledCumulativeGrid(df, groupCol, valueCol)
+    val (cum, totals, _, _) = pooledCumulativeGrid(df, groupCol, valueCol)
     val dec = "decimal(38,0)"
     val a = cum.select(col("_v"), col("_g").as("group_a"),
       col("_c").as("_ca"), col("_f").as("_fa"))
@@ -2014,65 +1983,28 @@ object Stats {
     * undefined; precision still emitted). NULL scores/labels drop.
     *
     * Shape at 100 TB: identical to [[rankAuc]] — one aggregation to the
-    * distinct-score table (map-side partials), the ≤255-band two-phase
-    * bucketed cumulative for counts-below (the only unpartitioned window
-    * runs over the ≤256-row band-offsets table), and the 1-row totals
-    * attach on a broadcast (the scalar-attach idiom, a BNLJ over one row
-    * by construction). tp/fp fall out as P − pos_below / rows-at-or-above;
-    * no plan node sorts the distinct-score table globally, so a raw
-    * continuous score (corpus-cardinality distinct values) still
-    * parallelizes across bands. Output rows = distinct scores — the
-    * caller's curve resolution, not a sampled approximation of it.
+    * distinct-score table (map-side partials) and its [[cumulativeBelow]]
+    * counts below, whose checkpoint job also reads the totals (N, P) as
+    * plan literals. tp/fp fall out as P − pos_below / rows-at-or-above.
+    * Output rows = distinct scores — the caller's curve resolution, not a
+    * sampled approximation of it.
     */
   def prCurve(
       df: DataFrame,
       scoreCol: String,
       labelCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // one corpus pass; checkpointed — the range pull, the totals agg, the
-    // band offsets, and the probe side all hang off it
     val base = df
       .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .groupBy(col(scoreCol).as("_s"))
       .agg(count(lit(1)).as("_cnt"),
         sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L)).as("_pos"))
-      .localCheckpoint(false)
-    val totals = base.agg(
-      coalesce(sum(col("_cnt")), lit(0L)).as("_n"),
-      coalesce(sum(col("_pos")), lit(0L)).as("_p"))
-    val rngRow = base.agg(
-      min(col("_s").cast("double")), max(col("_s").cast("double"))).head
-    val (lo, hi) =
-      if (rngRow.isNullAt(0)) (0.0, 0.0)
-      else (rngRow.getDouble(0), rngRow.getDouble(1))
-    val bucketed = base.withColumn("_bkt",
-      if (lo == hi) lit(1L)
-      else coalesce(
-        width_bucket(col("_s").cast("double"), lit(lo), lit(hi), lit(254)),
-        lit(255L)))
-    val offsets = bucketed
-      .groupBy(col("_bkt"))
-      .agg(sum(col("_cnt")).as("_bc"), sum(col("_pos")).as("_bp"))
-      .withColumn("_cntBefore",
-        coalesce(sum(col("_bc")).over(
-          Window.orderBy(col("_bkt"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("_posBefore",
-        coalesce(sum(col("_bp")).over(
-          Window.orderBy(col("_bkt"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_bkt"), col("_cntBefore"), col("_posBefore"))
-    val w = Window.partitionBy(col("_bkt")).orderBy(col("_s"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed
-      .join(broadcast(offsets), Seq("_bkt"))
-      .withColumn("_cumCnt",
-        col("_cntBefore") + coalesce(sum(col("_cnt")).over(w), lit(0L)))
-      .withColumn("_cumPos",
-        col("_posBefore") + coalesce(sum(col("_pos")).over(w), lit(0L)))
-      .crossJoin(broadcast(totals))
-      .withColumn("tp", col("_p") - col("_cumPos"))
-      .withColumn("_predicted", col("_n") - col("_cumCnt"))
+    val (ranked, totals, _) = cumulativeBelow(base, None, Nil, "_s", Seq("_cnt", "_pos"),
+      observe = Seq(coalesce(sum(col("_cnt")), lit(0L)), coalesce(sum(col("_pos")), lit(0L))))
+    ranked
+      .withColumn("_n", lit(totals.getLong(0)))
+      .withColumn("_p", lit(totals.getLong(1)))
+      .withColumn("tp", col("_p") - col("_pos_below"))
+      .withColumn("_predicted", col("_n") - col("_cnt_below"))
       .select(
         col("_s").as("threshold"),
         col("tp"),
@@ -2703,8 +2635,8 @@ object Stats {
     * divisions are floor-exact only on the non-negative lane; shift a
     * signed score first, the cusumChangepoint convention).
     *
-    * Shape at 100 TB: a bounded 1-row range pull at build time (the
-    * rankAuc precedent), ONE hash aggregation to the nBins-sized panel
+    * Shape at 100 TB: the score range read by the build-time checkpoint's
+    * own job ([[Fixpoint.observedCheckpoint]]), ONE hash aggregation to the nBins-sized panel
     * (map-side partials), and the ECE scalar attaches through a 1-row
     * broadcast — no sort, no window, no join touches the corpus.
     */
@@ -2714,12 +2646,12 @@ object Stats {
       labelCol: String,
       nBins: Int = 10): DataFrame = {
     require(nBins >= 1, "nBins must be >= 1")
-    val base = df
+    // checkpointed: the bin agg reads it after its own job reads the range
+    val (base, rng) = Fixpoint.observedCheckpoint(df
       .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .select(col(scoreCol).cast("double").as("_s"),
-        col(labelCol).cast("boolean").as("_y"))
-      .localCheckpoint(false) // the range pull and the bin agg both read it
-    val rng = base.agg(min(col("_s")), max(col("_s"))).head
+        col(labelCol).cast("boolean").as("_y")),
+      Seq(min(col("_s")), max(col("_s"))))
     val (lo, hi) =
       if (rng.isNullAt(0)) (0.0, 0.0)
       else (rng.getDouble(0), rng.getDouble(1))
@@ -2942,7 +2874,7 @@ object Stats {
     * self-join of the checkpointed bin table on (next-period, key), and
     * two bounded-table attaches: the consecutive-period pairing is a
     * lead window over the DISTINCT period table (period cardinality —
-    * the ≤255-row band-head precedent) and the row totals are a
+    * [[emdDrift]]'s bucket-head precedent) and the row totals are a
     * k·periods-row broadcast.
     */
   def rankMobility(

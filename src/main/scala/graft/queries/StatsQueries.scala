@@ -623,13 +623,14 @@ object StatsQueries extends QueryFamily {
         round(col("value") * 10000).cast("long").as("score"),
         (col("event_type") === "purchase").as("label")),
       "score", "label")
-  // the distinct-score aggregation is a lazy checkpoint boundary (two
-  // consumers + the build-time 1-row range pull); visible: the per-band
-  // count agg (1), the offsets prefix window's single partition over the
-  // ≤257-row band table (1), the per-band cumulative window (1), the final
-  // rollup (1) — every global-sort node is band-table-sized, never the
-  // distinct-score table (the continuous-score 100× guard)
-  query("eval_auc", evalAucQ, Shuffles(4))(
+  // the distinct-score table is checkpointed at build by the job that also
+  // reads its count and score sketch (Stats.cumulativeBelow); in one bucket
+  // (≤ 2¹⁴ distinct scores, as at sf0.001 and sf0.01) the visible plan is
+  // the cumulative window's single partition (1), whose output already
+  // satisfies the rollup. Past 2¹⁴ scores it is 4: the per-bucket window,
+  // the bucket-totals agg, the offsets window's single partition over ≤ 256
+  // rows and the final rollup — no sort ever sees more than one bucket
+  query("eval_auc", evalAucQ, Shuffles(1))(
     // the integer Mann-Whitney chain: tied scores at average rank via
     // 2*avgrank = 2*cum_below + cnt + 1, one integral division at the end
     """WITH e AS (SELECT CAST(round(value * 10000) AS BIGINT) AS s,
@@ -833,7 +834,7 @@ object StatsQueries extends QueryFamily {
   }
   // per-pair max agg + the min-attaining re-agg over the checkpointed
   // V×G²/2 pair grid; the corpus count pass, dense-grid cumulative
-  // (banded two-phase windows), and the G-row BNLJ scalar-attach all sit
+  // (Stats.cumulativeBelow), and the G-row BNLJ scalar-attach all sit
   // behind build-time checkpoints
   query("ks_test", ksTestQ, Shuffles(2))(
     // KS replay: the identical (group, value) count table → dense V×G
@@ -877,13 +878,11 @@ object StatsQueries extends QueryFamily {
       .select(col("value"), (col("event_type") === "purchase").as("label"))
     ops.Stats.prCurve(ev, "value", "label")
   }
-  // the eval_auc discipline minus the rollup, plus the 1-row totals agg:
-  // per-band agg (1), offsets prefix window over the ≤256-row band table
-  // (1), per-band cumulative window (1), totals global agg (1) — no
-  // global-sort node ever sees the distinct-score table
-  // the 1-row (n, p) totals attach onto the distinct-score curve: the
-  // scalar-attach idiom
-  query("eval_pr", evalPrQ, ShufflesWithBnlj(4))(
+  // the eval_auc plan minus the rollup: in one bucket the cumulative
+  // window's single partition (1), past 2¹⁴ distinct scores 3; the (n, p)
+  // totals are plan literals read by the checkpoint's own job, so no
+  // totals agg or 1-row attach remains
+  query("eval_pr", evalPrQ, Shuffles(1))(
     // PR-curve replay: distinct-score confusion matrices from the same
     // counts-below cumulative (predict positive ⇔ score ≥ t); integral
     // `//` matches the engine's DECIMAL(38,0) div on all-positive lanes
@@ -1190,11 +1189,14 @@ object StatsQueries extends QueryFamily {
       .select("event_type", "value")
     ops.Stats.emdDrift(ev, "event_type", "value")
   }
-  // gap table (band groupBy + head lead + within-band lead windows) +
-  // the pair join re-keys on the value + the pair-sum agg; the grid
-  // build sits behind the shared cum checkpoint, and the <=255-row
-  // band-head lead is the documented bounded-table window
-  query("emd_drift", emdDriftQ, Shuffles(6))(
+  // the gap table's lead window + the pair join re-keys on the value + the
+  // pair-sum agg; the grid build sits behind the shared cum checkpoint.
+  // Measured 4 in one bucket (≤ 2¹⁴ grid rows, as at sf0.001: one lead
+  // window over the value table); 6 past it (as at sf0.01), where the gaps
+  // take the grid's range buckets (bucket groupBy + head lead + in-bucket
+  // lead windows; the ≤ 256-row bucket-head lead is the documented
+  // bounded-table window)
+  query("emd_drift", emdDriftQ, Shuffles(4))(
     // W1 replay: the ks_test grid with the step integral instead of the
     // max — Σ |ΔF·n| · micro-lattice gap, one integral division
     """WITH base AS MATERIALIZED (

@@ -370,25 +370,26 @@ class PipelineOpsSpec extends SparkTestBase {
 
   test("rankAuc: continuous scores pay no global score-table sort; values match brute-force pairs") {
     import spark.implicits._
-    // corpus-cardinality distinct doubles — the 100×-scale shape the banded
-    // two-phase cumulative exists for (a raw-score window would single-task)
-    val rows = (1 to 3000).map(i =>
+    // corpus-cardinality distinct doubles — the 100×-scale shape the bucketed
+    // cumulative exists for (a raw-score window would single-task); past
+    // 2¹⁴ distinct scores, so the bucket rule picks more than one bucket
+    val rows = (1 to 20000).map(i =>
       (math.sin(i.toDouble) * 1000.0 + i * 1e-7, i % 7 == 0))
     val out = Stats.rankAuc(rows.toDF("score", "label"), "score", "label")
     val got = out.collect().head
     val pos = rows.filter(_._2).map(_._1)
     val neg = rows.filterNot(_._2).map(_._1)
     // brute-force Mann–Whitney pair count in half-win units
-    val wins = (for { p <- pos; n <- neg }
+    val wins = (for { p <- pos.iterator; n <- neg.iterator }
       yield if (p > n) 2L else if (p == n) 1L else 0L).sum
     val expected = wins * (1L << 20) / (2L * pos.size * neg.size)
     assert(got.getLong(0) === pos.size.toLong)
     assert(got.getLong(1) === neg.size.toLong)
     assert(got.getLong(2) === expected)
     // plan gate: every Window node in the per-score lane is PARTITIONED (by
-    // band); the only unpartitioned window runs over the ≤257-row band
-    // offsets table, whose child is the per-band AGGREGATE — never the
-    // distinct-score table itself
+    // range bucket); the only unpartitioned window runs over the ≤256-row
+    // bucket offsets table, whose child is the per-bucket AGGREGATE — never
+    // the distinct-score table itself
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -2362,7 +2363,8 @@ class PipelineOpsSpec extends SparkTestBase {
     // the listwise rank table is eagerly checkpointed at build time, so
     // its final query no longer CONTAINS the rank windows — the gate
     // inspects the doubledRanks derivation plan directly, which is exactly
-    // the plan the checkpoint materializes.
+    // the plan the checkpoint materializes; several buckets are forced, as
+    // for the pairwise plan above.
     val melted = df.select(org.apache.spark.sql.functions.explode(
       org.apache.spark.sql.functions.array(
         org.apache.spark.sql.functions.struct(
@@ -2373,7 +2375,8 @@ class PipelineOpsSpec extends SparkTestBase {
           org.apache.spark.sql.functions.col("y").as("v")))).as("_e"))
       .select(org.apache.spark.sql.functions.col("_e.c").as("_c"),
         org.apache.spark.sql.functions.col("_e.v").as("_v"))
-    val lw = rankWindows(Stats.doubledRanks(melted)).filter(_._2.contains("_v"))
+    val lw = rankWindows(Stats.doubledRanks(melted, Seq("x", "y"), _ => 8))
+      .filter(_._2.contains("_v"))
     assert(lw.nonEmpty, "expected rank windows in the plan")
     lw.foreach { case (part, _) =>
       assert(part.contains("_rb"), s"rank window must partition by the range bucket too: $part")
