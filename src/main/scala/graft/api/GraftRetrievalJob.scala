@@ -14,16 +14,18 @@ final case class RetrievalMetadata(
 
 /** Lazy retrieval handle — the analog of `DataEngineRetrievalJob`
   * (ref: data_engine_offline_store.py:313-348). The evaluation function is a
-  * thunk producing a DataFrame (itself lazy), so nothing executes until an
-  * action; `persist` is the saved-dataset path the reference leaves
-  * NotImplemented.
+  * thunk producing a DataFrame (itself lazy), so nothing executes before
+  * [[toDF]] is first read; `persist` is the saved-dataset path the
+  * reference leaves NotImplemented.
   */
 final class GraftRetrievalJob(
     evaluation: () => DataFrame,
     val metadata: RetrievalMetadata,
     val fullFeatureNames: Boolean = false) {
 
-  /** The logical plan for this retrieval; building it runs no Spark job. */
+  /** The plan for this retrieval, built on first access. Building it may
+    * run Spark jobs: [[graft.ops.FeatureStoreOps.pointInTime]] checkpoints
+    * the entity frame and reads its time range in that one job. */
   lazy val toDF: DataFrame = evaluation()
 
   /** Driver-side materialization (analog of to_df for a local user). */

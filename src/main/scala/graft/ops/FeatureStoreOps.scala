@@ -190,6 +190,11 @@ object FeatureStoreOps {
     }
   }
 
+  /** min, max and count of the entity timestamps: the range every feature
+    * scan is prefiltered to and the row count the broadcast gate sizes. */
+  private def entityStats(tsCol: String): Seq[Column] =
+    Seq(min(col(tsCol)).as("mn"), max(col(tsCol)).as("mx"), count(lit(1)).as("n"))
+
   /** Point-in-time join (`get_historical_features`,
     * ref: store.py:355-418 and the SQL template at store.py:601-779).
     *
@@ -209,6 +214,11 @@ object FeatureStoreOps {
     *    [[PitPlanHints]] the per-view shape is instead sketch-planned
     *    (broadcast / plain / salted from CMS key-count evidence), results
     *    byte-identical on every path.
+    *
+    * Building the plan ([[GraftRetrievalJob.toDF]]) runs one Spark job when
+    * the entity frame has no shuffle: its checkpoint, which also reads the
+    * entity time range and row count; the feature sources read their
+    * schemas without a job.
     */
   def pointInTime(
       spark: SparkSession,
@@ -221,18 +231,13 @@ object FeatureStoreOps {
 
     def eval(): DataFrame = {
       // Materialize the entity frame ONCE. It may be derived from a fact
-      // table (a query, a join); without this the stats aggregation, each
-      // view's distinct, and the final join chain would each recompute its
-      // full lineage — V+2 scans of the underlying table. Lazy local
-      // checkpoint: the stats `.head()` right below materializes it as a
-      // side effect of a job it runs anyway (an eager checkpoint would cost
-      // one extra full pass).
-      val ent = entity.localCheckpoint(eager = false)
-      // Driver-side min/max/count of the (small) entity frame — the analog of
-      // _get_entity_df_event_timestamp_range (store.py:577-598), needed to
-      // push a literal range filter into every feature scan.
-      val stats = ent.agg(
-        min(col(tsCol)).as("mn"), max(col(tsCol)).as("mx"), count(lit(1)).as("n")).head()
+      // table (a query, a join); without this each view's distinct and the
+      // final join chain would each recompute its full lineage — V+1 scans
+      // of the underlying table. The checkpoint's own job also reads the
+      // driver-side min/max/count of the (small) entity frame — the analog
+      // of _get_entity_df_event_timestamp_range (store.py:577-598), needed
+      // to push a literal range filter into every feature scan.
+      val (ent, stats) = Fixpoint.observedCheckpoint(entity, entityStats(tsCol))
       val (minEnt, maxEnt, nEnt) =
         (stats.getTimestamp(0), stats.getTimestamp(1), stats.getLong(2))
       // Broadcast decision per joined frame: both broadcast candidates have
@@ -366,11 +371,8 @@ object FeatureStoreOps {
       entityTimestampColumn: Option[String] = None): DataFrame = {
     require(bucketSeconds > 0, "bucketSeconds must be positive")
     val tsCol = entityTimestampColumn.getOrElse(inferEntityTimestampColumn(entity))
-    val ent = entity.select((view.entityKeys :+ tsCol).map(col): _*)
-      .distinct().localCheckpoint(eager = false)
-    val stats = ent.agg(
-      min(col(tsCol)).as("mn"), max(col(tsCol)).as("mx"),
-      count(lit(1)).as("n")).head()
+    val (ent, stats) = Fixpoint.observedCheckpoint(
+      entity.select((view.entityKeys :+ tsCol).map(col): _*).distinct(), entityStats(tsCol))
     val (minEnt, maxEnt, nEnt) =
       (stats.getTimestamp(0), stats.getTimestamp(1), stats.getLong(2))
     val evtTs = view.source.timestampField.get

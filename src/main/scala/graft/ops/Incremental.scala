@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.sources.FormatIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,11 +22,14 @@ import org.apache.spark.sql.functions._
   * The persisted form writes the state `partitionBy("dt")` so a range
   * merge's date predicate lands in `PartitionFilters` — out-of-range days
   * are never opened — and a day's re-ingest REPLACES that day's partition
-  * (dynamic partition overwrite): re-running yesterday's pipeline is
-  * idempotent, where a blind append would silently double-count (the
-  * opposite trade from [[Similarity.appendToIvfIndex]], whose postings are
-  * append-only because its batches are disjoint by contract; ingest
-  * re-runs are not).
+  * through [[StoreSwap]]'s generational commit (the replaced day commits
+  * to a sibling generation, every other day adopts into it by rename):
+  * re-running yesterday's pipeline is idempotent, where a blind append
+  * would silently double-count (the opposite trade from
+  * [[Similarity.appendToIvfIndex]], whose postings are append-only because
+  * its batches are disjoint by contract; ingest re-runs are not). Reads of
+  * the persisted state take its schema from one parquet footer
+  * ([[graft.sources.FormatIO.readParquet]]), not from a Spark job.
   */
 object Incremental {
 
@@ -208,7 +212,7 @@ object Incremental {
       // manual fragment deletes) left a torn store at every point between
       // the overwrite job commit and the last delete — a concurrent reader
       // could see the merged batch AND the fragments it absorbed.
-      val day = spark.read.parquet(path).filter(col("dt").cast("string").isin(dts: _*))
+      val day = FormatIO.readParquet(spark, path).filter(col("dt").cast("string").isin(dts: _*))
       val merged = mergeAgg(day, "dt" +: keys)
         .withColumn("batch_id", lit(-1L))
         .repartition(dts.size, col("dt"))
@@ -235,6 +239,6 @@ object Incremental {
     // partition-type inference may surface dt as DATE; the ISO string
     // literals coerce either way (Spark casts the LITERAL, never the
     // column) and the predicate stays prunable
-    mergeAgg(spark.read.parquet(path)
+    mergeAgg(FormatIO.readParquet(spark, path)
       .filter(col("dt") >= fromDt && col("dt") <= toDt), keys)
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.md5Prefix64
+import graft.sources.FormatIO
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -329,7 +330,7 @@ object Sketch {
     if (!StoreSwap.recover(spark, path, depth = 0)) incoming.write.parquet(path)
     else {
       val merged = quantileMergeRegisters(
-        spark.read.parquet(path).unionByName(incoming), groupCols, k)
+        FormatIO.readParquet(spark, path).unionByName(incoming), groupCols, k)
       StoreSwap.swapIn(spark, path, depth = 0)(merged.write.parquet(_))
     }
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.sources.FormatIO
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -199,10 +200,12 @@ object Temporal {
     * per-key history and is always right.
     *
     * NULL keys drop (the family policy: a key identifies the row; NULL
-    * identifies nothing). Per batch: one scan of the batch + one scan of
-    * the AFFECTED buckets only (partition-pruned by the bucket values),
-    * one collapse aggregation, one pruned-partition write. Driver state =
-    * the affected bucket id set (≤ numBuckets ints).
+    * identifies nothing). Per batch: one shuffle-free pass over the batch
+    * for its bucket set ([[LatestStore.bucketSet]]), one scan of the
+    * AFFECTED buckets only (partition-pruned by the bucket values, schema
+    * from one footer), the batch's collapse and the merge's, one
+    * pruned-partition write. Driver state = the affected bucket id set
+    * (≤ numBuckets ints).
     */
   def scd2UpsertBatch(
       batch: DataFrame,
@@ -218,17 +221,17 @@ object Temporal {
     val flat = collapseSameInstant(
       batch.filter(col(keyCol).isNotNull).select(cols: _*), keyCol, tsCol, valueCols)
       .select(col(keyCol) +: col(tsCol) +: valueCols.map(c => col(s"_v.$c").as(c)): _*)
-    val bucket = pmod(xxhash64(col(keyCol)), lit(numBuckets.toLong)).cast("int")
-    val withBucket = flat.withColumn("bucket", bucket)
+    val bucket = LatestStore.bucketOf(col(keyCol), numBuckets)
     // generational commit (StoreSwap — the quantile store's tmp/prev
     // swap): merged buckets commit to a sibling, untouched buckets adopt
     // by rename; a crash at any point leaves a complete generation
     if (!StoreSwap.recover(spark, path, depth = 1)) {
-      withBucket.write.partitionBy("bucket").parquet(path)
+      flat.withColumn("bucket", bucket).write.partitionBy("bucket").parquet(path)
     } else {
-      val affected = withBucket.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val existing = spark.read.parquet(path)
+      // the affected buckets come off the raw batch in one shuffle-free
+      // job (the collapse keeps every key, so its bucket set is the same)
+      val affected = LatestStore.bucketSet(batch, keyCol, numBuckets)
+      val existing = FormatIO.readParquet(spark, path)
         .filter(col("bucket").isin(affected: _*))
         .select((keyCol +: tsCol +: valueCols).map(col): _*)
       val merged = collapseSameInstant(
@@ -286,12 +289,12 @@ object Temporal {
         .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket)
       .map(_.getPath.getName.stripPrefix("bucket=").toInt).toSeq
     if (fragmented.nonEmpty) {
-      val rows = spark.read.parquet(path)
+      val rows = FormatIO.readParquet(spark, path)
         .filter(col("bucket").isin(fragmented: _*))
         .select((keyCol +: tsCol +: valueCols).map(col): _*)
       val compacted = collapseSameInstant(rows, keyCol, tsCol, valueCols)
         .select(col(keyCol) +: col(tsCol) +: valueCols.map(c => col(s"_v.$c").as(c)): _*)
-        .withColumn("bucket", pmod(xxhash64(col(keyCol)), lit(numBuckets.toLong)).cast("int"))
+        .withColumn("bucket", LatestStore.bucketOf(col(keyCol), numBuckets))
         .repartition(fragmented.size, col("bucket"))
       // generational commit: the compacted buckets land in the tmp
       // generation (reading the still-live store), untouched buckets adopt
@@ -321,16 +324,12 @@ object Temporal {
       valueCols: Seq[String],
       numBuckets: Int,
       keys: Option[DataFrame] = None): DataFrame = {
-    val log = spark.read.parquet(path)
+    val log = FormatIO.readParquet(spark, path)
     val pruned = keys match {
       case None => log
       case Some(k) =>
-        val buckets = k.filter(col(keyCol).isNotNull)
-          .select(pmod(xxhash64(col(keyCol)), lit(numBuckets.toLong))
-            .cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        log.filter(col("bucket").isin(buckets: _*))
-          .join(k.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi")
+        log.filter(col("bucket").isin(LatestStore.bucketSet(k, keyCol, numBuckets): _*))
+          .join(k.select(col(keyCol)), Seq(keyCol), "left_semi")
     }
     scd2(pruned.drop("bucket"), keyCol, tsCol, valueCols)
   }

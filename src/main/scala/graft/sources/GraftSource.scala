@@ -113,19 +113,23 @@ final case class GraftSource(
         // through the Hadoop input format (splittable; schema self-described,
         // so schemaDdl/readOptions — parquet/csv/json levers — don't apply)
         AvroIO.read(spark, t)
+      // readOptions pass through to the DataFrameReader — the schema-drift
+      // lever at scale is `mergeSchema=true` (a long-lived table gains
+      // columns; without it parquet answers with ONE footer's schema and
+      // silently hides the new columns on mixed directories). Path sources
+      // only: catalog tables and queries read through the session, which
+      // takes no reader options.
+      case Some(t) if isPath && format == SourceFormat.Parquet && schemaDdl.isEmpty =>
+        // that one footer read on the Spark driver, not in an inference job
+        // (mergeSchema goes back to Spark's multi-footer inference)
+        FormatIO.readParquet(spark, t, readOptions)
       case Some(t) if isPath =>
-        // readOptions pass through to the DataFrameReader — the schema-drift
-        // lever at scale is `mergeSchema=true` (a long-lived table gains
-        // columns; without it parquet answers with ONE footer's schema and
-        // silently hides the new columns on mixed directories). Applied
-        // LAST so explicit user options override the built-in defaults
-        // (inferSchema/header). Path sources only: catalog tables and
-        // queries read through the session, which takes no reader options.
+        // user options applied LAST so they override the built-in defaults
+        // (inferSchema/header)
         val reader = spark.read.format(format.name)
         val withSchema = schemaDdl match {
           case Some(ddl) => reader.schema(StructType.fromDDL(ddl))
-          case None if format != SourceFormat.Parquet => reader.option("inferSchema", "true")
-          case None => reader
+          case None => reader.option("inferSchema", "true")
         }
         (if (format == SourceFormat.Csv) withSchema.option("header", "true") else withSchema)
           .options(readOptions)
@@ -204,9 +208,13 @@ final case class GraftSource(
 
   /** Analysis-time existence check; throws [[GraftSourceNotFoundException]]
     * (ref: store.py:202-220 — cos summary / schema lookup / LIMIT 1 probe).
-    * Never a Spark job when the source declares `schemaDdl` (or is parquet,
-    * whose footer read is metadata-only); a schema-LESS csv/json path has to
-    * sample the files to infer — declare the schema to keep validation free.
+    * No Spark job when the source declares `schemaDdl` or is parquet, whose
+    * schema comes from one footer read on the Spark driver
+    * ([[FormatIO.readParquet]]). Spark's file listing still runs as a job
+    * under a directory with more sub-directories than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32). A
+    * schema-LESS csv/json path has to sample the files to infer — declare
+    * the schema to keep validation free.
     */
   def validate(spark: SparkSession): Unit = {
     def probe(what: String)(body: => Unit): Unit =
@@ -217,6 +225,8 @@ final case class GraftSource(
     table match {
       case Some(t) if isPath && format == SourceFormat.Avro =>
         probe(t)(AvroIO.readSchema(spark, t)) // one file header, no data read
+      case Some(t) if isPath && format == SourceFormat.Parquet && schemaDdl.isEmpty =>
+        probe(t)(FormatIO.readParquet(spark, t).schema)
       case Some(t) if isPath => probe(t) {
         val r = spark.read.format(format.name)
         (schemaDdl match {
