@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions._
+import graft.sources.FormatIO
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -319,7 +320,7 @@ object Dedup {
     val bGroups = minHashBandRows(exB, numHashes, bands)
       .groupBy(struct(col("band"), col("bucket")).as("bucketKey"))
       .agg(array_sort(collect_list(col("id"))).as("b_ids"))
-    val rGroups = spark.read.parquet(s"$path/buckets")
+    val rGroups = FormatIO.readParquet(spark, s"$path/buckets")
       .groupBy(struct(col("band"), col("bucket")).as("bucketKey"))
       .agg(array_sort(collect_list(col("id"))).as("r_ids"))
     val joined = bGroups.join(rGroups, "bucketKey")
@@ -338,9 +339,9 @@ object Dedup {
       .localCheckpoint(false) // feeds the verify join AND the id pruning
     // verify evidence: only candidate ref ids' hash sets leave the index
     val candRefIds = cand.select(col("b_id").as("id")).distinct()
-    val refHashes = spark.read.parquet(s"$path/hashes")
+    val refHashes = FormatIO.readParquet(spark, s"$path/hashes")
       .join(candRefIds, Seq("id"), "left_semi")
-    val refSizes = spark.read.parquet(s"$path/sizes")
+    val refSizes = FormatIO.readParquet(spark, s"$path/sizes")
       .join(candRefIds, Seq("id"), "left_semi")
     val sizesA = exB.groupBy(col("id")).agg(count(lit(1)).as("n"))
     cand

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.sources.FormatIO
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -316,7 +317,7 @@ object Layout {
     * without a rewrite, and new writes only ever produce the positional
     * names. */
   private def readManifest(spark: SparkSession, path: String): DataFrame = {
-    val m = spark.read.parquet(s"$path/_zonemap")
+    val m = FormatIO.readParquet(spark, s"$path/_zonemap")
     if (m.columns.contains("min_a"))
       m.withColumnsRenamed(Map(
         "min_a" -> "min_0", "max_a" -> "max_0",

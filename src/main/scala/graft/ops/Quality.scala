@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.sources.FormatIO
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -280,7 +281,7 @@ object Quality {
     */
   def readMetricsHistory(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    FormatIO.readParquet(spark, path)
       .select(col("dt").cast("string").as("dt"), col("check"),
         col("col_name"), col("n_rows"), col("n_violations"), col("passed"))
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions._
+import graft.sources.FormatIO
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -517,7 +518,7 @@ object Similarity {
       spark: SparkSession,
       path: String,
       batch: DataFrame): Unit = { // columns: id, vec
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = FormatIO.readParquet(spark, s"$path/centroids")
       .orderBy(col("cell")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
     require(cents.nonEmpty, s"no centroids at $path/centroids")
@@ -602,12 +603,12 @@ object Similarity {
       k: Int,
       numProbes: Int = 4): DataFrame = {
     import org.apache.spark.sql.graft.{PqAdcScoreOne, PqAdcTableSet}
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = FormatIO.readParquet(spark, s"$path/centroids")
       .orderBy(col("cell")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
     require(cents.nonEmpty, s"no centroids at $path/centroids")
     val coarse = cents.toMap
-    val books = spark.read.parquet(s"$path/codebooks")
+    val books = FormatIO.readParquet(spark, s"$path/codebooks")
       .orderBy(col("subspace"), col("cell")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -660,7 +661,7 @@ object Similarity {
       .map { case ((qid, _, cell), i) => (qid, cell, i) }.toSeq
       .toDF("qid", "cell", "_tid")
     val probedCells = probeRows.map(_._3).distinct.sorted
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = FormatIO.readParquet(spark, s"$path/postings")
       .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
     val w = Window.partitionBy(col("qid")).orderBy(col("adc_dist").asc, col("id"))
     postings.join(broadcast(probesDf), "cell")
@@ -686,7 +687,7 @@ object Similarity {
       queries: DataFrame, // columns: qid, qvec
       k: Int,
       numProbes: Int = 4): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = FormatIO.readParquet(spark, s"$path/centroids")
       .orderBy(col("cell")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
     require(cents.nonEmpty, s"no centroids at $path/centroids")
@@ -700,7 +701,7 @@ object Similarity {
       .localCheckpoint()
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = FormatIO.readParquet(spark, s"$path/postings")
       .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
     val scored = postings.join(broadcast(probes), "cell")
       .withColumn("cosine", cosineSimilarity(col("qvec"), col("vec")))

@@ -1101,16 +1101,7 @@ object Stats {
       tsCol: String,
       valueCol: String,
       bucketSeconds: Long): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    val usPerBucket = bucketSeconds * 1000000L
-    val base = df
-      .filter(col(groupCol).isNotNull && col(tsCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("_g"),
-        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket))
-          .as("_b"))
-      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
-        .as("_x"))
+    val base = bucketSums(df, groupCol, tsCol, valueCol, bucketSeconds)
     // sign-split truncating division: trunc(num·10⁶ / den), den > 0
     def truncDivPpm(num: String, den: String): String =
       s"""CASE WHEN $num >= 0
@@ -1130,10 +1121,7 @@ object Stats {
          |    THEN CAST((CAST(_slope AS DECIMAL(38,0)) * e._b) div 1000000 AS BIGINT)
          |    ELSE -CAST((CAST(-_slope AS DECIMAL(38,0)) * e._b) div 1000000 AS BIGINT)
          |  END)))""".stripMargin
-    base
-      .groupBy(col("_g"))
-      .agg(array_sort(collect_list(struct(col("_b"), col("_x"))))
-        .as("_steps"))
+    bucketSteps(base, Seq(col("_g")))
       .withColumn("_slopes", expr(slopesSql))
       .withColumn("_slope", expr(
         "CASE WHEN size(_slopes) = 0 THEN CAST(NULL AS BIGINT) ELSE " +
@@ -1178,22 +1166,13 @@ object Stats {
       valueCol: String,
       bucketSeconds: Long,
       lags: Seq[Int]): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
     require(lags.nonEmpty && lags.forall(_ >= 1), "lags must be >= 1")
     // same duplicate-lag discipline as crossCorrelation: a repeated lag
     // leaves the correlation unchanged but inflates n_pairs for that lag
     val lagSet = lags.distinct
-    val usPerBucket = bucketSeconds * 1000000L
     // one corpus pass; checkpointed — both sides of the lag join read it
-    val base = df
-      .filter(col(groupCol).isNotNull && col(tsCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(groupCol).as("_g"),
-        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket))
-          .as("_b"))
-      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
-        .as("_x"))
-      .localCheckpoint(false)
+    val base = bucketSums(df, groupCol, tsCol, valueCol, bucketSeconds,
+      stringKey = false).localCheckpoint(false)
     val dec = "decimal(38,0)"
     val probe = base
       .withColumn("_lag", explode(typedLit(lagSet.map(_.toLong))))
@@ -1247,30 +1226,21 @@ object Stats {
       valueCol: String,
       bucketSeconds: Long,
       lags: Seq[Int]): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
     require(lags.nonEmpty && lags.forall(_ >= 0), "lags must be >= 0")
     // a repeated lag would double-count every matched bucket pair in that
     // lag's (sa, sb, lag) group — ccf is invariant (all six moment sums
     // scale together) but n_pairs would read 2x the truth, so sparse
     // estimates would look denser than they are
     val lagSet = lags.distinct
-    val usPerBucket = bucketSeconds * 1000000L
-    val base = df
-      .filter(col(seriesCol).isNotNull && col(tsCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(seriesCol).cast("string").as("_s"),
-        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket))
-          .as("_b"))
-      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
-        .as("_x"))
+    val base = bucketSums(df, seriesCol, tsCol, valueCol, bucketSeconds)
       .localCheckpoint(false)
     val dec = "decimal(38,0)"
     val probe = base
       .withColumn("_lag", explode(typedLit(lagSet.map(_.toLong))))
-      .select(col("_s").as("_sa"), (col("_b") + col("_lag")).as("_b"),
+      .select(col("_g").as("_sa"), (col("_b") + col("_lag")).as("_b"),
         col("_lag"), col("_x").as("_xa"))
     val pairs = probe
-      .join(base.select(col("_s").as("_sb"), col("_b"), col("_x")), Seq("_b"))
+      .join(base.select(col("_g").as("_sb"), col("_b"), col("_x")), Seq("_b"))
       .filter(col("_sa") =!= col("_sb"))
       .select(col("_sa"), col("_sb"), col("_lag"),
         col("_xa").cast(dec).as("_a"), col("_x").cast(dec).as("_c2"))
@@ -2020,6 +1990,109 @@ object Stats {
             .cast("long")).as("f1_ppm"))
   }
 
+  /** The monitoring family's first pass: per (group, bucket) the exact
+    * micro-unit sum `_x = Σ⌊v·10⁶⌋` (a long) of bucket
+    * `_b = unix_micros(ts) div (bucketSeconds·10⁶)`, keyed `_g` — the
+    * group column cast to string, or as it is when `stringKey` is false.
+    * Rows with a NULL group, timestamp or value drop. Buckets are bounded
+    * by time range / bucketSeconds, never by event volume, so everything
+    * downstream runs on a table of that size.
+    */
+  private def bucketSums(
+      df: DataFrame,
+      groupCol: String,
+      tsCol: String,
+      valueCol: String,
+      bucketSeconds: Long,
+      stringKey: Boolean = true): DataFrame = {
+    require(bucketSeconds > 0, "bucketSeconds must be positive")
+    val usPerBucket = bucketSeconds * 1000000L
+    df
+      .filter(col(groupCol).isNotNull && col(tsCol).isNotNull &&
+        col(valueCol).isNotNull)
+      .groupBy(
+        (if (stringKey) col(groupCol).cast("string") else col(groupCol)).as("_g"),
+        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket)).as("_b"))
+      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
+        .as("_x"))
+  }
+
+  /** The start timestamp of [[bucketSums]]' bucket `b` (the micro lattice
+    * starts at the epoch). */
+  private def bucketStart(b: Column, bucketSeconds: Long): Column =
+    timestamp_micros(b * (bucketSeconds * 1000000L))
+
+  /** Each key's `(_b, _x)` series as one `_steps` array sorted by bucket:
+    * the ordered input of the fold charts and [[theilSen]]'s pair vote. */
+  private def bucketSteps(series: DataFrame, keys: Seq[Column]): DataFrame =
+    series.groupBy(keys: _*)
+      .agg(array_sort(collect_list(struct(col("_b"), col("_x")))).as("_steps"))
+
+  /** Rejects a ppm weight outside [1, 10⁶] (α = 0 never moves, α > 1
+    * overshoots); each pair is (parameter name, value). */
+  private def requirePpm(params: (String, Long)*): Unit =
+    params.foreach { case (n, v) =>
+      require(v >= 1 && v <= 1000000L, s"$n must be in [1, 1000000], got $v") }
+
+  /** The fold charts' tail: `fold` (one of the `*FoldSql` left folds)
+    * replays each key's sorted steps, its per-step structs explode back to
+    * rows, and each row reads `head` (the output keys and the rendered
+    * bucket, from `_r.b`), the exact `value_micro`, then every
+    * (fold field, output name) of `fields` floored to a long. Floor, not
+    * round: the recurrence's doubles are bit-identical across engines, but
+    * decimal ROUNDING of a ~10⁹ micro value sits below one ulp and the two
+    * engines' round() disagree there — floor of identical doubles never
+    * does.
+    */
+  private def foldChart(
+      series: DataFrame,
+      keys: Seq[Column],
+      head: Seq[Column],
+      fold: String,
+      fields: Seq[(String, String)]): DataFrame =
+    bucketSteps(series, keys)
+      .select(keys :+ explode(expr(fold)).as("_r"): _*)
+      .select(head ++ (col("_r.x").as("value_micro") +: fields.map { case (f, n) =>
+        floor(col(s"_r.$f")).cast("long").as(n) }): _*)
+
+  /** A fold chart over raw events: [[bucketSums]] keyed by the group as a
+    * string, then [[foldChart]] with the group and the `bucket` start.
+    * `fold` is built after the bucket check. */
+  private def liveChart(
+      df: DataFrame,
+      groupCol: String,
+      tsCol: String,
+      valueCol: String,
+      bucketSeconds: Long,
+      fold: => String,
+      fields: Seq[(String, String)]): DataFrame =
+    foldChart(bucketSums(df, groupCol, tsCol, valueCol, bucketSeconds),
+      Seq(col("_g")),
+      Seq(col("_g").as(groupCol), bucketStart(col("_r.b"), bucketSeconds).as("bucket")),
+      fold, fields)
+
+  /** A fold chart over an incremental daily-state store
+    * ([[Incremental.dailyState]]): the store's per-batch partials merge to
+    * one exact `sum_value` per (keys, dt), the bucket is the epoch day,
+    * and each output row carries `dt` back as an ISO date string. `fold`
+    * is built after the key check. */
+  private def dailyStateChart(
+      state: DataFrame,
+      keys: Seq[String],
+      fold: => String,
+      fields: Seq[(String, String)]): DataFrame = {
+    require(keys.nonEmpty, "need at least one key column")
+    val kc = keys.map(col)
+    val epoch = to_date(lit("1970-01-01"))
+    val merged = state
+      .groupBy(kc :+ col("dt"): _*)
+      .agg(sum(col("sum_value")).as("_x"))
+      .withColumn("_b", datediff(col("dt").cast("date"), epoch).cast("long"))
+    foldChart(merged, kc,
+      kc :+ date_add(epoch, col("_r.b").cast("int")).cast("string").as("dt"),
+      fold, fields)
+  }
+
   /** CUSUM changepoint scan — the drift family's TEMPORAL member: where
     * [[ksTest]]/[[categoricalDrift]] compare two populations you already
     * split, CUSUM asks WHERE to split one time series. Per group, bucket
@@ -2052,19 +2125,10 @@ object Stats {
       tsCol: String,
       valueCol: String,
       bucketSeconds: Long): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
     import org.apache.spark.sql.expressions.Window
-    val usPerBucket = bucketSeconds * 1000000L
     // one corpus pass; checkpointed — the totals agg and the window probe
     // both hang off it
-    val base = df
-      .filter(col(groupCol).isNotNull && col(tsCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("_g"),
-        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket))
-          .as("_b"))
-      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
-        .as("_x"))
+    val base = bucketSums(df, groupCol, tsCol, valueCol, bucketSeconds)
       .localCheckpoint(false)
     val totals = base.groupBy(col("_g"))
       .agg(count(lit(1)).as("n_buckets"), sum(col("_x")).as("s_total"))
@@ -2096,36 +2160,9 @@ object Stats {
           expr("(CAST(_dmax AS DECIMAL(38,0)) * 1000000) div " +
             "(CAST(n_buckets AS DECIMAL(38,0)) * abs(s_total))").cast("long"))
           .as("cusum_ppm"),
-        timestamp_micros(col("_bAt") * usPerBucket).as("change_at"))
+        bucketStart(col("_bAt"), bucketSeconds).as("change_at"))
   }
 
-  /** EWMA control chart — the monitoring family's RECENCY member next to
-    * [[cusumChangepoint]] (CUSUM accumulates evidence of one persistent
-    * level shift over the whole window; the exponentially-weighted moving
-    * average tracks the CURRENT level with geometric forgetting, the
-    * classic Roberts (1959) chart): per group the value series buckets by
-    * `bucketSeconds` into the ⌊v·10⁶⌋ micro-unit lane, and over observed
-    * buckets in time order the recurrence `s₁ = x₁`,
-    * `sₜ = sₜ₋₁ + α·(xₜ − sₜ₋₁)` with `α = alphaPpm/10⁶`. Per bucket:
-    * `value_micro` (exact long), `ewma` (the smoothed level, round 6) and
-    * `resid` (`xₜ − sₜ₋₁`, the one-step prediction error the caller
-    * thresholds — NULL on each group's first bucket, no prediction yet).
-    *
-    * Determinism: the recurrence is the [[graft.ops.Temporal.kaplanMeier]]
-    * ordered-fold discipline — a LEFT fold over time-sorted buckets, each
-    * step one subtract+multiply+add in fixed operand order, α computed as
-    * one IEEE division from its ppm integer INSIDE both engines — so the
-    * DuckDB twin's recursive CTE replays it bit-for-bit. State contract:
-    * the fold buffers one group's observed buckets (bounded by TIME RANGE
-    * / bucketSeconds, never the corpus — the cusum contract). Missing
-    * buckets are skipped, not zero-filled (compose [[graft.ops.Temporal
-    * .resampleForwardFill]] upstream to chart dense time). NULL groups/
-    * timestamps/values drop.
-    *
-    * Shape at 100 TB: one corpus pass to the (group, bucket) sums
-    * (map-side partials), ONE group-keyed exchange for the collect, the
-    * fold and re-explode in-row.
-    */
   /** The shared EWMA left fold over a sorted `_steps` array of
     * `(_b, _x)` structs — the first element seeds s = x with a NULL
     * residual; alpha divides from its ppm integer IN-PLAN so the oracle's
@@ -2133,7 +2170,8 @@ object Stats {
     * [[ewmaChart]] (live bucketed corpus) and [[ewmaFromDailyState]]
     * (the persisted incremental-state read path).
     */
-  private def ewmaFoldSql(alphaPpm: Long): String =
+  private def ewmaFoldSql(alphaPpm: Long): String = {
+    requirePpm("alphaPpm" -> alphaPpm)
     s"""aggregate(
        |  _steps,
        |  struct(false AS init, CAST(0.0 AS DOUBLE) AS s,
@@ -2153,42 +2191,47 @@ object Stats {
        |      CASE WHEN acc.init
        |        THEN CAST(e._x AS DOUBLE) - acc.s END AS r)) AS out),
        |  acc -> acc.out)""".stripMargin
+  }
 
+  private val ewmaFields = Seq("s" -> "ewma_micro", "r" -> "resid_micro")
+
+  /** EWMA control chart — the monitoring family's RECENCY member next to
+    * [[cusumChangepoint]] (CUSUM accumulates evidence of one persistent
+    * level shift over the whole window; the exponentially-weighted moving
+    * average tracks the CURRENT level with geometric forgetting, the
+    * classic Roberts (1959) chart): per group the value series buckets by
+    * `bucketSeconds` into the ⌊v·10⁶⌋ micro-unit lane, and over observed
+    * buckets in time order the recurrence `s₁ = x₁`,
+    * `sₜ = sₜ₋₁ + α·(xₜ − sₜ₋₁)` with `α = alphaPpm/10⁶`. Per bucket:
+    * `value_micro` (exact long), `ewma_micro` (the smoothed level) and
+    * `resid_micro` (`xₜ − sₜ₋₁`, the one-step prediction error the caller
+    * thresholds — NULL on each group's first bucket, no prediction yet),
+    * both floored to the micro lattice ([[foldChart]]).
+    *
+    * Determinism: the recurrence is the [[graft.ops.Temporal.kaplanMeier]]
+    * ordered-fold discipline — a LEFT fold over time-sorted buckets, each
+    * step one subtract+multiply+add in fixed operand order, α computed as
+    * one IEEE division from its ppm integer INSIDE both engines — so the
+    * DuckDB twin's recursive CTE replays it bit-for-bit. State contract:
+    * the fold buffers one group's observed buckets (bounded by TIME RANGE
+    * / bucketSeconds, never the corpus — the cusum contract). Missing
+    * buckets are skipped, not zero-filled (compose [[graft.ops.Temporal
+    * .resampleForwardFill]] upstream to chart dense time). NULL groups/
+    * timestamps/values drop.
+    *
+    * Shape at 100 TB: one corpus pass to the (group, bucket) sums
+    * (map-side partials), ONE group-keyed exchange for the collect, the
+    * fold and re-explode in-row.
+    */
   def ewmaChart(
       df: DataFrame,
       groupCol: String,
       tsCol: String,
       valueCol: String,
       bucketSeconds: Long,
-      alphaPpm: Long = 300000L): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    require(alphaPpm >= 1 && alphaPpm <= 1000000L,
-      s"alphaPpm must be in [1, 1000000], got $alphaPpm")
-    val usPerBucket = bucketSeconds * 1000000L
-    val base = df
-      .filter(col(groupCol).isNotNull && col(tsCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("_g"),
-        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket))
-          .as("_b"))
-      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
-        .as("_x"))
-    base
-      .groupBy(col("_g"))
-      .agg(array_sort(collect_list(struct(col("_b"), col("_x"))))
-        .as("_steps"))
-      .select(col("_g"), explode(expr(ewmaFoldSql(alphaPpm))).as("_r"))
-      .select(
-        col("_g").as(groupCol),
-        timestamp_micros(col("_r.b") * usPerBucket).as("bucket"),
-        col("_r.x").as("value_micro"),
-        // floor to the micro lattice: the recurrence's doubles are
-        // bit-identical across engines, but decimal ROUNDING of a ~10⁹
-        // micro value sits below one ulp and the two engines' round()
-        // disagree there — floor of identical doubles never does
-        floor(col("_r.s")).cast("long").as("ewma_micro"),
-        floor(col("_r.r")).cast("long").as("resid_micro"))
-  }
+      alphaPpm: Long = 300000L): DataFrame =
+    liveChart(df, groupCol, tsCol, valueCol, bucketSeconds, ewmaFoldSql(alphaPpm),
+      ewmaFields)
 
   /** The STREAMING EWMA monitor's read side: [[ewmaChart]]'s identical
     * recurrence over a persisted incremental daily-state store
@@ -2211,29 +2254,8 @@ object Stats {
   def ewmaFromDailyState(
       state: DataFrame,
       keys: Seq[String],
-      alphaPpm: Long = 300000L): DataFrame = {
-    require(keys.nonEmpty, "need at least one key column")
-    require(alphaPpm >= 1 && alphaPpm <= 1000000L,
-      s"alphaPpm must be in [1, 1000000], got $alphaPpm")
-    val kc = keys.map(col)
-    val merged = state
-      .groupBy(kc :+ col("dt"): _*)
-      .agg(sum(col("sum_value")).as("_x"))
-      .withColumn("_b",
-        datediff(col("dt").cast("date"), to_date(lit("1970-01-01")))
-          .cast("long"))
-    merged
-      .groupBy(kc: _*)
-      .agg(array_sort(collect_list(struct(col("_b"), col("_x"))))
-        .as("_steps"))
-      .select(kc :+ explode(expr(ewmaFoldSql(alphaPpm))).as("_r"): _*)
-      .select(kc ++ Seq(
-        date_add(to_date(lit("1970-01-01")), col("_r.b").cast("int"))
-          .cast("string").as("dt"),
-        col("_r.x").as("value_micro"),
-        floor(col("_r.s")).cast("long").as("ewma_micro"),
-        floor(col("_r.r")).cast("long").as("resid_micro")): _*)
-  }
+      alphaPpm: Long = 300000L): DataFrame =
+    dailyStateChart(state, keys, ewmaFoldSql(alphaPpm), ewmaFields)
 
   /** The Holt left fold over a sorted `_steps` array of `(_b, _x)` structs
     * — the [[ewmaFoldSql]] discipline with a second recurrence: the first
@@ -2246,6 +2268,7 @@ object Stats {
     * and both engines repeating the same expression stay bit-identical).
     */
   private def holtFoldSql(alphaPpm: Long, betaPpm: Long): String = {
+    requirePpm("alphaPpm" -> alphaPpm, "betaPpm" -> betaPpm)
     val a = s"(CAST($alphaPpm AS DOUBLE) / 1000000.0D)"
     val bta = s"(CAST($betaPpm AS DOUBLE) / 1000000.0D)"
     val lNext =
@@ -2274,6 +2297,9 @@ object Stats {
        |  acc -> acc.out)""".stripMargin
   }
 
+  private val holtFields =
+    Seq("l" -> "level_micro", "t" -> "trend_micro", "r" -> "resid_micro")
+
   /** Holt double-exponential (level + trend) chart — [[ewmaChart]]'s
     * trend-aware sibling, the monitoring family's FORECASTING member: the
     * EWMA tracks the current level with geometric forgetting but lags a
@@ -2285,7 +2311,7 @@ object Stats {
     * (documented — the trend warms up over the first few buckets rather
     * than trusting one noisy first difference). Per (group, bucket):
     * `value_micro` (exact long), `level_micro`/`trend_micro`/`resid_micro`
-    * — floors of bit-identical doubles (the [[ewmaChart]] lattice
+    * — floors of bit-identical doubles (the [[foldChart]] lattice
     * argument; residual NULL on each group's first bucket, no forecast
     * yet).
     *
@@ -2303,35 +2329,9 @@ object Stats {
       valueCol: String,
       bucketSeconds: Long,
       alphaPpm: Long = 300000L,
-      betaPpm: Long = 100000L): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    require(alphaPpm >= 1 && alphaPpm <= 1000000L,
-      s"alphaPpm must be in [1, 1000000], got $alphaPpm")
-    require(betaPpm >= 1 && betaPpm <= 1000000L,
-      s"betaPpm must be in [1, 1000000], got $betaPpm")
-    val usPerBucket = bucketSeconds * 1000000L
-    val base = df
-      .filter(col(groupCol).isNotNull && col(tsCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("_g"),
-        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket))
-          .as("_b"))
-      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
-        .as("_x"))
-    base
-      .groupBy(col("_g"))
-      .agg(array_sort(collect_list(struct(col("_b"), col("_x"))))
-        .as("_steps"))
-      .select(col("_g"),
-        explode(expr(holtFoldSql(alphaPpm, betaPpm))).as("_r"))
-      .select(
-        col("_g").as(groupCol),
-        timestamp_micros(col("_r.b") * usPerBucket).as("bucket"),
-        col("_r.x").as("value_micro"),
-        floor(col("_r.l")).cast("long").as("level_micro"),
-        floor(col("_r.t")).cast("long").as("trend_micro"),
-        floor(col("_r.r")).cast("long").as("resid_micro"))
-  }
+      betaPpm: Long = 100000L): DataFrame =
+    liveChart(df, groupCol, tsCol, valueCol, bucketSeconds,
+      holtFoldSql(alphaPpm, betaPpm), holtFields)
 
   /** [[holtChart]]'s persisted-state read side — [[ewmaFromDailyState]]'s
     * trend-aware twin, the same 100 TB monitoring shape: the stream
@@ -2349,32 +2349,8 @@ object Stats {
       state: DataFrame,
       keys: Seq[String],
       alphaPpm: Long = 300000L,
-      betaPpm: Long = 100000L): DataFrame = {
-    require(keys.nonEmpty, "need at least one key column")
-    require(alphaPpm >= 1 && alphaPpm <= 1000000L,
-      s"alphaPpm must be in [1, 1000000], got $alphaPpm")
-    require(betaPpm >= 1 && betaPpm <= 1000000L,
-      s"betaPpm must be in [1, 1000000], got $betaPpm")
-    val kc = keys.map(col)
-    val merged = state
-      .groupBy(kc :+ col("dt"): _*)
-      .agg(sum(col("sum_value")).as("_x"))
-      .withColumn("_b",
-        datediff(col("dt").cast("date"), to_date(lit("1970-01-01")))
-          .cast("long"))
-    merged
-      .groupBy(kc: _*)
-      .agg(array_sort(collect_list(struct(col("_b"), col("_x"))))
-        .as("_steps"))
-      .select(kc :+ explode(expr(holtFoldSql(alphaPpm, betaPpm))).as("_r"): _*)
-      .select(kc ++ Seq(
-        date_add(to_date(lit("1970-01-01")), col("_r.b").cast("int"))
-          .cast("string").as("dt"),
-        col("_r.x").as("value_micro"),
-        floor(col("_r.l")).cast("long").as("level_micro"),
-        floor(col("_r.t")).cast("long").as("trend_micro"),
-        floor(col("_r.r")).cast("long").as("resid_micro")): _*)
-  }
+      betaPpm: Long = 100000L): DataFrame =
+    dailyStateChart(state, keys, holtFoldSql(alphaPpm, betaPpm), holtFields)
 
   /** The Holt–Winters left fold over a sorted `_steps` array of `(_b, _x)`
     * structs — [[holtFoldSql]] with the THIRD recurrence: the accumulator
@@ -2393,6 +2369,7 @@ object Stats {
     */
   private def holtWintersFoldSql(
       alphaPpm: Long, betaPpm: Long, gammaPpm: Long, period: Int): String = {
+    requirePpm("alphaPpm" -> alphaPpm, "betaPpm" -> betaPpm, "gammaPpm" -> gammaPpm)
     val a = s"(CAST($alphaPpm AS DOUBLE) / 1000000.0D)"
     val bta = s"(CAST($betaPpm AS DOUBLE) / 1000000.0D)"
     val g = s"(CAST($gammaPpm AS DOUBLE) / 1000000.0D)"
@@ -2433,6 +2410,9 @@ object Stats {
        |  acc -> acc.out)""".stripMargin
   }
 
+  private val holtWintersFields = Seq("l" -> "level_micro", "t" -> "trend_micro",
+    "si" -> "season_micro", "r" -> "resid_micro")
+
   /** Holt–Winters additive chart — the forecasting lane's SEASONAL member,
     * completing EWMA (level) → [[holtChart]] (level + trend) → level +
     * trend + seasonality: Holt's one-step forecast lags any metric with a
@@ -2449,7 +2429,7 @@ object Stats {
     * (group, bucket): `value_micro`, `level_micro`, `trend_micro`,
     * `season_micro` (this bucket's phase index AFTER its update; 0 on
     * the seed), `resid_micro` (NULL on the seed) — floors of
-    * bit-identical doubles (the [[ewmaChart]] lattice argument).
+    * bit-identical doubles (the [[foldChart]] lattice argument).
     *
     * Determinism, state, and shape: exactly [[holtChart]] — ordered left
     * fold, one corpus pass to (group, bucket) sums, ONE group-keyed
@@ -2470,36 +2450,10 @@ object Stats {
       alphaPpm: Long = 300000L,
       betaPpm: Long = 100000L,
       gammaPpm: Long = 300000L): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
     require(period >= 2, "period must be >= 2 (a period of 1 is Holt)")
     require(period <= 1000, "period must be <= 1000 (the index array is fold state)")
-    Seq(("alphaPpm", alphaPpm), ("betaPpm", betaPpm), ("gammaPpm", gammaPpm))
-      .foreach { case (n, v) =>
-        require(v >= 1 && v <= 1000000L, s"$n must be in [1, 1000000], got $v") }
-    val usPerBucket = bucketSeconds * 1000000L
-    val base = df
-      .filter(col(groupCol).isNotNull && col(tsCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("_g"),
-        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket))
-          .as("_b"))
-      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
-        .as("_x"))
-    base
-      .groupBy(col("_g"))
-      .agg(array_sort(collect_list(struct(col("_b"), col("_x"))))
-        .as("_steps"))
-      .select(col("_g"),
-        explode(expr(holtWintersFoldSql(alphaPpm, betaPpm, gammaPpm, period)))
-          .as("_r"))
-      .select(
-        col("_g").as(groupCol),
-        timestamp_micros(col("_r.b") * usPerBucket).as("bucket"),
-        col("_r.x").as("value_micro"),
-        floor(col("_r.l")).cast("long").as("level_micro"),
-        floor(col("_r.t")).cast("long").as("trend_micro"),
-        floor(col("_r.si")).cast("long").as("season_micro"),
-        floor(col("_r.r")).cast("long").as("resid_micro"))
+    liveChart(df, groupCol, tsCol, valueCol, bucketSeconds,
+      holtWintersFoldSql(alphaPpm, betaPpm, gammaPpm, period), holtWintersFields)
   }
 
   /** [[holtWintersChart]]'s persisted-state read side —
@@ -2518,33 +2472,9 @@ object Stats {
       alphaPpm: Long = 300000L,
       betaPpm: Long = 100000L,
       gammaPpm: Long = 300000L): DataFrame = {
-    require(keys.nonEmpty, "need at least one key column")
     require(period >= 2 && period <= 1000, s"period must be in [2, 1000], got $period")
-    Seq(("alphaPpm", alphaPpm), ("betaPpm", betaPpm), ("gammaPpm", gammaPpm))
-      .foreach { case (n, v) =>
-        require(v >= 1 && v <= 1000000L, s"$n must be in [1, 1000000], got $v") }
-    val kc = keys.map(col)
-    val merged = state
-      .groupBy(kc :+ col("dt"): _*)
-      .agg(sum(col("sum_value")).as("_x"))
-      .withColumn("_b",
-        datediff(col("dt").cast("date"), to_date(lit("1970-01-01")))
-          .cast("long"))
-    merged
-      .groupBy(kc: _*)
-      .agg(array_sort(collect_list(struct(col("_b"), col("_x"))))
-        .as("_steps"))
-      .select(kc :+
-        explode(expr(holtWintersFoldSql(alphaPpm, betaPpm, gammaPpm, period)))
-          .as("_r"): _*)
-      .select(kc ++ Seq(
-        date_add(to_date(lit("1970-01-01")), col("_r.b").cast("int"))
-          .cast("string").as("dt"),
-        col("_r.x").as("value_micro"),
-        floor(col("_r.l")).cast("long").as("level_micro"),
-        floor(col("_r.t")).cast("long").as("trend_micro"),
-        floor(col("_r.si")).cast("long").as("season_micro"),
-        floor(col("_r.r")).cast("long").as("resid_micro")): _*)
+    dailyStateChart(state, keys,
+      holtWintersFoldSql(alphaPpm, betaPpm, gammaPpm, period), holtWintersFields)
   }
 
   /** Seasonality-normalized anomaly panel — the drift family's PERIODIC
@@ -2580,20 +2510,12 @@ object Stats {
       bucketSeconds: Long = 86400L,
       periodBuckets: Int = 7,
       bandPpm: Long = 500000L): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
     require(periodBuckets >= 2, "periodBuckets must be >= 2 (a period of 1 is just the mean)")
     require(bandPpm > 0, "bandPpm must be positive")
-    val usPerBucket = bucketSeconds * 1000000L
     // one corpus pass; checkpointed — the phase means and the panel both
     // read it
-    val base = df
-      .filter(col(groupCol).isNotNull && col(tsCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(groupCol).as("_g"),
-        call_function("div", unix_micros(col(tsCol)), lit(usPerBucket))
-          .as("_b"))
-      .agg(sum(floor(col(valueCol).cast("double") * 1000000L).cast("long"))
-        .as("_x"))
+    val base = bucketSums(df, groupCol, tsCol, valueCol, bucketSeconds,
+      stringKey = false)
       .withColumn("_ph", pmod(col("_b"), lit(periodBuckets.toLong)))
       .localCheckpoint(false)
     val phase = base.groupBy(col("_g"), col("_ph"))
@@ -2605,7 +2527,7 @@ object Stats {
           expr("(CAST(_x AS DECIMAL(38,0)) * 1000000) div _pm").cast("long")))
       .select(
         col("_g").as(groupCol),
-        timestamp_micros(col("_b") * usPerBucket).as("bucket"),
+        bucketStart(col("_b"), bucketSeconds).as("bucket"),
         col("_ph").as("phase"),
         col("_x").as("value_micro"),
         col("_pm").as("phase_mean_micro"),

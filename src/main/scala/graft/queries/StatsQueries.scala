@@ -1571,21 +1571,25 @@ object StatsQueries extends QueryFamily {
       |  coalesce(sl.n_pairs, 0) AS n_pairs, sl.slope_ppm, ic.intercept_micro
       |FROM nb LEFT JOIN sl ON sl.g = nb.g LEFT JOIN ic ON ic.g = nb.g""".stripMargin)
 
-  /** The streaming EWMA monitor's read path: daily per-type state
-    * partials (the incremental-store shape the exactly-once sink
-    * maintains) merged and folded — identical numbers to ewma_chart,
-    * state-table-sized work.
-    */
-  private def ewmaFromStateQ(s: SparkSession, dir: String): DataFrame = {
+  /** The events' per-(event_type, day) state partials in the ⌊v·10⁶⌋
+    * micro-unit lane: the incremental daily-state store the three
+    * `*_from_state` queries fold. */
+  private def eventTypeDailyState(s: SparkSession, dir: String): DataFrame = {
     val ev = events(dir).load(s)
       .filter(col("event_type").isNotNull && col("ts").isNotNull &&
         col("value").isNotNull)
       .withColumn("v_micro",
         floor(col("value").cast("double") * 1000000L).cast("long"))
-    val state = ops.Incremental.dailyState(
-      ev, Seq("event_type"), "ts", "v_micro")
-    ops.Stats.ewmaFromDailyState(state, Seq("event_type"), 300000L)
+    ops.Incremental.dailyState(ev, Seq("event_type"), "ts", "v_micro")
   }
+
+  /** The streaming EWMA monitor's read path: daily per-type state
+    * partials (the incremental-store shape the exactly-once sink
+    * maintains) merged and folded — identical numbers to ewma_chart,
+    * state-table-sized work.
+    */
+  private def ewmaFromStateQ(s: SparkSession, dir: String): DataFrame =
+    ops.Stats.ewmaFromDailyState(eventTypeDailyState(s, dir), Seq("event_type"), 300000L)
   // the raw->daily-state agg + the per-day partial merge + the
   // group-keyed fold collect; recurrence/re-explode in-row
   query("ewma_from_state", ewmaFromStateQ, Shuffles(3))(
@@ -1622,16 +1626,9 @@ object StatsQueries extends QueryFamily {
     * ewma_from_state read path with the forecasting recurrence: the
     * monitor's cost follows the state table, never the stream.
     */
-  private def holtFromStateQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(dir).load(s)
-      .filter(col("event_type").isNotNull && col("ts").isNotNull &&
-        col("value").isNotNull)
-      .withColumn("v_micro",
-        floor(col("value").cast("double") * 1000000L).cast("long"))
-    val state = ops.Incremental.dailyState(
-      ev, Seq("event_type"), "ts", "v_micro")
-    ops.Stats.holtFromDailyState(state, Seq("event_type"), 300000L, 100000L)
-  }
+  private def holtFromStateQ(s: SparkSession, dir: String): DataFrame =
+    ops.Stats.holtFromDailyState(eventTypeDailyState(s, dir), Seq("event_type"),
+      300000L, 100000L)
   // identical state-path chain with the trend recurrence in the fold
   query("holt_from_state", holtFromStateQ, Shuffles(3)) {
     // state-path Holt replay: the ewma_from_state day-keyed chain with
@@ -1673,17 +1670,9 @@ object StatsQueries extends QueryFamily {
     * monitor's cost follows the state table, never the stream, and the
     * seasonal index array is part of the fold, not extra state rows.
     */
-  private def holtWintersFromStateQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(dir).load(s)
-      .filter(col("event_type").isNotNull && col("ts").isNotNull &&
-        col("value").isNotNull)
-      .withColumn("v_micro",
-        floor(col("value").cast("double") * 1000000L).cast("long"))
-    val state = ops.Incremental.dailyState(
-      ev, Seq("event_type"), "ts", "v_micro")
-    ops.Stats.holtWintersFromDailyState(state, Seq("event_type"),
+  private def holtWintersFromStateQ(s: SparkSession, dir: String): DataFrame =
+    ops.Stats.holtWintersFromDailyState(eventTypeDailyState(s, dir), Seq("event_type"),
       period = 7, 300000L, 100000L, 300000L)
-  }
   // identical state-path chain with the seasonal recurrence in the fold
   query("holt_winters_from_state", holtWintersFromStateQ, Shuffles(3)) {
     // state-path Holt–Winters replay: the holt_from_state day-keyed

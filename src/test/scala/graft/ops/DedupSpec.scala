@@ -188,6 +188,26 @@ class DedupSpec extends SparkTestBase {
     assert(Dedup.minHashLshAgainstStore(batch.limit(0), "doc_id", "text", store).count() === 0)
   }
 
+  test("minHashLshAgainstStore: one call and its collect run 14 jobs") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft-sigstore-jobs").toString + "/store"
+    Dedup.buildSignatureStore(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (2L, "completely different content about spark catalyst optimizer internals here now")
+    ).toDF("doc_id", "text"), "doc_id", "text", store)
+    val batch = Seq(
+      (11L, "the quick brown fox jumps over the lazy dog near the river bank today extra"),
+      (12L, "novel text sharing nothing with any accepted reference document at all thanks")
+    ).toDF("doc_id", "text")
+    // the reference index's buckets, hashes and sizes schemas are footer
+    // reads; the jobs left are the batch and candidate checkpoints and
+    // the query
+    val (rows, jobs) = jobsOf(
+      Dedup.minHashLshAgainstStore(batch, "doc_id", "text", store, threshold = 0.6).collect())
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((11L, 1L)))
+    assert(jobs === 14)
+  }
+
   test("semanticDedupAgainst: cross-side pairs only; frozen centroids; novel batch docs pair with nothing") {
     import spark.implicits._
     val ref = Seq(

@@ -137,6 +137,33 @@ class FeatureStoreOpsSpec extends SparkTestBase {
     } finally spark.conf.unset("graft.pit.broadcastBytes")
   }
 
+  test("pointInTime: duplicated (key, ts) entity rows each get the one as-of answer, on both join paths") {
+    import spark.implicits._
+    Seq((1L, ts("2024-01-02 00:00:00"), "a"), (1L, ts("2024-01-05 12:00:00"), "b"))
+      .toDF("k", "ets", "s").createOrReplaceTempView("feat_dup_v")
+    val src2 = GraftSource.of(table = Some("feat_dup_v"), timestampField = Some("ets"))
+    val fv1 = FeatureView("f1", featSrc, Seq("k"), Seq("v"), tieBreak = Some("rid"))
+    val fv2 = FeatureView("f2", src2, Seq("k"), Seq("s"))
+    val ent = entity(
+      (1L, "2024-01-06 00:00:00"), (1L, "2024-01-06 00:00:00"), (1L, "2024-01-06 00:00:00"),
+      (1L, "2024-01-04 00:00:00"), (1L, "2024-01-04 00:00:00"),
+      (2L, "2024-01-04 00:00:00"), (2L, "2024-01-04 00:00:00"),
+      (9L, "2024-01-10 00:00:00"), (9L, "2024-01-10 00:00:00"))
+    def run(): Seq[(Long, String, Option[Double], Option[String])] =
+      FeatureStoreOps.pointInTime(spark, ent, Seq(fv1, fv2)).toDF.collect()
+        .map(r => (r.getAs[Long]("k"), r.getAs[Timestamp]("event_timestamp").toString,
+          Option(r.getAs[java.lang.Double]("v")).map(_.doubleValue),
+          Option(r.getAs[String]("s")))).toSeq.sortBy(r => (r._1, r._2))
+    val want = Seq.fill(2)((1L, "2024-01-04 00:00:00.0", Some(1.0), Some("a"))) ++
+      Seq.fill(3)((1L, "2024-01-06 00:00:00.0", Some(3.0), Some("b"))) ++
+      Seq.fill(2)((2L, "2024-01-04 00:00:00.0", Some(4.0), None)) ++
+      Seq.fill(2)((9L, "2024-01-10 00:00:00.0", None, None))
+    assert(run() === want)
+    spark.conf.set("graft.pit.broadcastBytes", "0")
+    try assert(run() === want)
+    finally spark.conf.unset("graft.pit.broadcastBytes")
+  }
+
   test("pointInTime: byte gate blocks broadcast when rows x width exceeds the threshold") {
     import org.apache.spark.sql.functions._
     // 50k rows x (8B key + 12B ts) = ~1 MB estimate. Under the old 1M-ROW gate

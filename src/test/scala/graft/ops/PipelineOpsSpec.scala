@@ -2119,6 +2119,74 @@ class PipelineOpsSpec extends SparkTestBase {
         r.getLong(3), r.getLong(4), r.getLong(5)))).toMap)
   }
 
+  test("monitoring family: every operator rejects a bad bucket width, ppm weight, period or key list") {
+    import spark.implicits._
+    val ev = Seq(("a", ts("2024-01-01 00:00:00"), 1.0)).toDF("g", "ts", "v")
+    val st = Seq(("a", "2024-01-01", 1L)).toDF("g", "dt", "sum_value")
+    val g = Seq("g")
+    val bucket = "bucketSeconds must be positive"
+    def ppm(n: String, v: Long) = s"$n must be in [1, 1000000], got $v"
+    val cases: Seq[(String, () => Any, String)] = Seq(
+      ("theilSen", () => Stats.theilSen(ev, "g", "ts", "v", 0L), bucket),
+      ("autocorrelation", () => Stats.autocorrelation(ev, "g", "ts", "v", 0L, Seq(1)), bucket),
+      ("crossCorrelation", () => Stats.crossCorrelation(ev, "g", "ts", "v", 0L, Seq(0)), bucket),
+      ("cusumChangepoint", () => Stats.cusumChangepoint(ev, "g", "ts", "v", 0L), bucket),
+      ("ewmaChart", () => Stats.ewmaChart(ev, "g", "ts", "v", 0L), bucket),
+      ("holtChart", () => Stats.holtChart(ev, "g", "ts", "v", 0L), bucket),
+      ("holtWintersChart", () => Stats.holtWintersChart(ev, "g", "ts", "v", 0L), bucket),
+      ("seasonalAnomaly", () => Stats.seasonalAnomaly(ev, "g", "ts", "v", 0L), bucket),
+      ("seasonalAnomaly band", () => Stats.seasonalAnomaly(ev, "g", "ts", "v", bandPpm = 0L),
+        "bandPpm must be positive"),
+      ("holtWintersChart period 1", () => Stats.holtWintersChart(ev, "g", "ts", "v", 60L,
+        period = 1), "period must be >= 2 (a period of 1 is Holt)"),
+      ("holtWintersChart period 1001", () => Stats.holtWintersChart(ev, "g", "ts", "v", 60L,
+        period = 1001), "period must be <= 1000 (the index array is fold state)"),
+      ("holtWintersFromDailyState period 1", () => Stats.holtWintersFromDailyState(st, g,
+        period = 1), "period must be in [2, 1000], got 1"),
+      ("holtWintersFromDailyState period 1001", () => Stats.holtWintersFromDailyState(st, g,
+        period = 1001), "period must be in [2, 1000], got 1001"),
+      ("ewmaFromDailyState keys", () => Stats.ewmaFromDailyState(st, Nil),
+        "need at least one key column"),
+      ("holtFromDailyState keys", () => Stats.holtFromDailyState(st, Nil),
+        "need at least one key column"),
+      ("holtWintersFromDailyState keys", () => Stats.holtWintersFromDailyState(st, Nil),
+        "need at least one key column")
+    ) ++ Seq(0L, 1000001L).flatMap(v => Seq(
+      ("ewmaChart alphaPpm", () => Stats.ewmaChart(ev, "g", "ts", "v", 60L, alphaPpm = v),
+        ppm("alphaPpm", v)),
+      ("holtChart alphaPpm", () => Stats.holtChart(ev, "g", "ts", "v", 60L, alphaPpm = v),
+        ppm("alphaPpm", v)),
+      ("holtChart betaPpm", () => Stats.holtChart(ev, "g", "ts", "v", 60L, betaPpm = v),
+        ppm("betaPpm", v)),
+      ("holtWintersChart alphaPpm", () => Stats.holtWintersChart(ev, "g", "ts", "v", 60L,
+        alphaPpm = v), ppm("alphaPpm", v)),
+      ("holtWintersChart betaPpm", () => Stats.holtWintersChart(ev, "g", "ts", "v", 60L,
+        betaPpm = v), ppm("betaPpm", v)),
+      ("holtWintersChart gammaPpm", () => Stats.holtWintersChart(ev, "g", "ts", "v", 60L,
+        gammaPpm = v), ppm("gammaPpm", v)),
+      ("ewmaFromDailyState alphaPpm", () => Stats.ewmaFromDailyState(st, g, alphaPpm = v),
+        ppm("alphaPpm", v)),
+      ("holtFromDailyState alphaPpm", () => Stats.holtFromDailyState(st, g, alphaPpm = v),
+        ppm("alphaPpm", v)),
+      ("holtFromDailyState betaPpm", () => Stats.holtFromDailyState(st, g, betaPpm = v),
+        ppm("betaPpm", v)),
+      ("holtWintersFromDailyState alphaPpm", () => Stats.holtWintersFromDailyState(st, g,
+        alphaPpm = v), ppm("alphaPpm", v)),
+      ("holtWintersFromDailyState betaPpm", () => Stats.holtWintersFromDailyState(st, g,
+        betaPpm = v), ppm("betaPpm", v)),
+      ("holtWintersFromDailyState gammaPpm", () => Stats.holtWintersFromDailyState(st, g,
+        gammaPpm = v), ppm("gammaPpm", v))))
+    assert(cases.length === 40)
+    cases.foreach { case (name, call, message) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage === s"requirement failed: $message", name)
+    }
+    // the bounds themselves are accepted
+    Stats.holtWintersChart(ev, "g", "ts", "v", 1L, period = 1000, alphaPpm = 1L,
+      betaPpm = 1000000L, gammaPpm = 1L)
+    Stats.holtWintersFromDailyState(st, g, period = 2, alphaPpm = 1000000L)
+  }
+
   test("ewmaChart: hand recurrence at alpha=1/2; first bucket seeds with NULL residual; missing buckets skip; NULLs drop; invariant") {
     import spark.implicits._
     def run(rows: Seq[(String, Timestamp, Double)], alphaPpm: Long) =

@@ -296,6 +296,21 @@ class SimilaritySpec extends SparkTestBase {
     assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*cell.*"), plan.take(3000))
   }
 
+  test("queryIvfIndex: one call and its collect run 9 jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-jobs").toString
+    val e = emb(sf())
+    Similarity.writeIvfIndex(e.select(col("vec_id").as("id"), col("embedding").as("vec")),
+      dir, numCells = 8, lloydIters = 2)
+    val queries = e.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    // the centroid collect, the probe checkpoint, the probed-cell collect
+    // and the query; the centroid and postings schemas are footer reads
+    val (rows, jobs) = jobsOf(
+      Similarity.queryIvfIndex(spark, dir, queries, k = 5, numProbes = 4).collect())
+    assert(rows.length === 15)
+    assert(jobs === 9)
+  }
+
   test("appendToIvfIndex: centroids frozen, appended index == frozen-centroid model over A ∪ B") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-app").toString
     val e = emb(sf())
