@@ -231,7 +231,7 @@ object FeatureStoreOps {
 
     def eval(): DataFrame = {
       // Materialize the entity frame ONCE. It may be derived from a fact
-      // table (a query, a join); without this each view's join and the
+      // table (a query, a join); without this each view's distinct and the
       // final join chain would each recompute its full lineage — V+1 scans
       // of the underlying table. The checkpoint's own job also reads the
       // driver-side min/max/count of the (small) entity frame — the analog
@@ -261,10 +261,9 @@ object FeatureStoreOps {
         val feat = view.source.loadWithTimeRange(spark, lowerTs, Option(maxEnt))
           .select(featCols.map(col): _*)
 
-        // the view's entity rows (template's __entity_dataframe CTE); no
-        // distinct: the arg-max groupBy below collapses duplicated
-        // (keys, ts) rows, and the max over their repeated pairs is the same
-        val entKeysRaw = ent.select((view.entityKeys :+ tsCol).map(col): _*)
+        // per-view distinct entity rows (template's __entity_dataframe CTE)
+        val entKeysRaw = ent
+          .select((view.entityKeys :+ tsCol).map(col): _*).distinct()
         // physical shape: sketch-planned when the caller handed CMS
         // evidence for this view ([[PitPlanHints]]); otherwise the static
         // rows × schema-width broadcast estimate — byte-identical to the

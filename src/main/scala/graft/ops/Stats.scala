@@ -2056,15 +2056,14 @@ object Stats {
         floor(col(s"_r.$f")).cast("long").as(n) }): _*)
 
   /** A fold chart over raw events: [[bucketSums]] keyed by the group as a
-    * string, then [[foldChart]] with the group and the `bucket` start.
-    * `fold` is built after the bucket check. */
+    * string, then [[foldChart]] with the group and the `bucket` start. */
   private def liveChart(
       df: DataFrame,
       groupCol: String,
       tsCol: String,
       valueCol: String,
       bucketSeconds: Long,
-      fold: => String,
+      fold: String,
       fields: Seq[(String, String)]): DataFrame =
     foldChart(bucketSums(df, groupCol, tsCol, valueCol, bucketSeconds),
       Seq(col("_g")),
@@ -2074,12 +2073,11 @@ object Stats {
   /** A fold chart over an incremental daily-state store
     * ([[Incremental.dailyState]]): the store's per-batch partials merge to
     * one exact `sum_value` per (keys, dt), the bucket is the epoch day,
-    * and each output row carries `dt` back as an ISO date string. `fold`
-    * is built after the key check. */
+    * and each output row carries `dt` back as an ISO date string. */
   private def dailyStateChart(
       state: DataFrame,
       keys: Seq[String],
-      fold: => String,
+      fold: String,
       fields: Seq[(String, String)]): DataFrame = {
     require(keys.nonEmpty, "need at least one key column")
     val kc = keys.map(col)
@@ -2370,6 +2368,8 @@ object Stats {
   private def holtWintersFoldSql(
       alphaPpm: Long, betaPpm: Long, gammaPpm: Long, period: Int): String = {
     requirePpm("alphaPpm" -> alphaPpm, "betaPpm" -> betaPpm, "gammaPpm" -> gammaPpm)
+    // a period of 1 is Holt; the index array is fold state
+    require(period >= 2 && period <= 1000, s"period must be in [2, 1000], got $period")
     val a = s"(CAST($alphaPpm AS DOUBLE) / 1000000.0D)"
     val bta = s"(CAST($betaPpm AS DOUBLE) / 1000000.0D)"
     val g = s"(CAST($gammaPpm AS DOUBLE) / 1000000.0D)"
@@ -2450,8 +2450,6 @@ object Stats {
       alphaPpm: Long = 300000L,
       betaPpm: Long = 100000L,
       gammaPpm: Long = 300000L): DataFrame = {
-    require(period >= 2, "period must be >= 2 (a period of 1 is Holt)")
-    require(period <= 1000, "period must be <= 1000 (the index array is fold state)")
     liveChart(df, groupCol, tsCol, valueCol, bucketSeconds,
       holtWintersFoldSql(alphaPpm, betaPpm, gammaPpm, period), holtWintersFields)
   }
@@ -2472,7 +2470,6 @@ object Stats {
       alphaPpm: Long = 300000L,
       betaPpm: Long = 100000L,
       gammaPpm: Long = 300000L): DataFrame = {
-    require(period >= 2 && period <= 1000, s"period must be in [2, 1000], got $period")
     dailyStateChart(state, keys,
       holtWintersFoldSql(alphaPpm, betaPpm, gammaPpm, period), holtWintersFields)
   }

@@ -170,8 +170,7 @@ object FeatureStoreQueries extends QueryFamily {
         unix_micros(col("event_timestamp")).as("event_timestamp_us"),
         col("value").as("feat_value"), col("event_type").as("feat_event_type"))
   }
-  // the arg-max collapse; the entity rows broadcast without a distinct
-  query("pit_join", pitJoin, Shuffles(1))(
+  query("pit_join", pitJoin, Shuffles(2))(
     s"""WITH $entCte, $evCte, $pitCtes
        |SELECT user_id, ent_us AS event_timestamp_us,
        |       feat_value, feat_event_type
@@ -235,8 +234,7 @@ object FeatureStoreQueries extends QueryFamily {
         unix_micros(col("event_timestamp")).as("event_timestamp_us"),
         col("value").as("feat_value"), col("event_type").as("feat_event_type"))
   }
-  // the arg-max collapse over the unioned source
-  query("pit_join_created", pitJoinCreated, Shuffles(1))(
+  query("pit_join_created", pitJoinCreated, Shuffles(2))(
     s"""WITH $entCte,
        |ev AS (
        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, value, event_type,
@@ -276,8 +274,7 @@ object FeatureStoreQueries extends QueryFamily {
         col("events__value"), col("events__event_type"),
         col("orders__o_totalprice"), col("orders__o_orderstatus"))
   }
-  // one arg-max collapse per view
-  query("pit_join_multi", pitJoinMulti, Shuffles(2))(
+  query("pit_join_multi", pitJoinMulti, Shuffles(4))(
     s"""WITH $entCte, $evCte,
        |base AS (
        |  SELECT e.user_id, e.ent_us, v.ts_us, v.event_id, v.value, v.event_type

@@ -232,10 +232,10 @@ object PipelineQueries extends QueryFamily {
         col("asof_event_type").as("regime_event_type"),
         unix_micros(col("asof_valid_from")).as("regime_since_us"))
   }
-  // exactly the SUM of its stages' budgets — pit pick (1), decayed agg
-  // (1), scd2 collapse + window (2), as-of arg-max (1); every attach join
-  // broadcasts, so composition adds ZERO exchanges
-  query("pipeline_feature_serve", pipelineFeatureServe, Shuffles(5))(
+  // exactly the SUM of its stages' budgets — entity distinct + pit pick
+  // (2), decayed agg (1), scd2 collapse + window (2), as-of arg-max (1);
+  // every attach join broadcasts, so composition adds ZERO exchanges
+  query("pipeline_feature_serve", pipelineFeatureServe, Shuffles(6))(
     // the full serving chain replayed from the SAME fragments as its
     // parts: PIT pick (pitCtes) + fixed-cutoff decayed recency
     // (decayedCtes) + SCD2 regime containment-attach (scd2Ctes)

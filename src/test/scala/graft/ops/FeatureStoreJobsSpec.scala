@@ -96,18 +96,18 @@ class FeatureStoreJobsSpec extends SparkTestBase {
     assert(got === Map(3L -> Some(43L), 4L -> Some(44L), 77L -> None))
   }
 
-  test("pointInTime: building and collecting the frame is 5 jobs") {
+  test("pointInTime: building and collecting the frame is 6 jobs") {
     val view = FeatureView("ev", source, Seq("user_id"), Seq("kind", "value"),
       ttlSeconds = 7L * 86400L, tieBreak = Some("event_id"))
     val entity = Seq((3L, t(1440L + 100)), (3L, t(1440L + 100)), (4L, t(2 * 1440L)), (77L, t(10)))
       .toDF("user_id", "event_timestamp")
-    // the entity checkpoint with its stats, then the query's: the
-    // broadcast of the entity rows (no distinct shuffle before it), the
-    // arg-max shuffle's map stage, the broadcast of its result and the
-    // result stage
+    // the entity checkpoint with its stats, then the query's: the map
+    // stage of the per-view entity distinct, the broadcast of its rows,
+    // the arg-max shuffle's map stage, the broadcast of its result and
+    // the result stage
     val (rows, jobs) = jobsOf(FeatureStoreOps.pointInTime(spark, entity, Seq(view)).toDF.collect())
     assert(rows.length === 4)
-    assert(jobs === 5)
+    assert(jobs === 6)
   }
 
   test("stalenessAudit: the entity stats ride the checkpoint's own jobs") {

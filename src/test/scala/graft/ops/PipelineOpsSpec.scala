@@ -2138,9 +2138,9 @@ class PipelineOpsSpec extends SparkTestBase {
       ("seasonalAnomaly band", () => Stats.seasonalAnomaly(ev, "g", "ts", "v", bandPpm = 0L),
         "bandPpm must be positive"),
       ("holtWintersChart period 1", () => Stats.holtWintersChart(ev, "g", "ts", "v", 60L,
-        period = 1), "period must be >= 2 (a period of 1 is Holt)"),
+        period = 1), "period must be in [2, 1000], got 1"),
       ("holtWintersChart period 1001", () => Stats.holtWintersChart(ev, "g", "ts", "v", 60L,
-        period = 1001), "period must be <= 1000 (the index array is fold state)"),
+        period = 1001), "period must be in [2, 1000], got 1001"),
       ("holtWintersFromDailyState period 1", () => Stats.holtWintersFromDailyState(st, g,
         period = 1), "period must be in [2, 1000], got 1"),
       ("holtWintersFromDailyState period 1001", () => Stats.holtWintersFromDailyState(st, g,
